@@ -1,7 +1,8 @@
 .PHONY: check-fast test bench install-hooks
 
-# Pure-Python guardrails (~2 s, no Spark): registry/COVERAGE.md sync
-# and the driver 50-name lexical-window invariant. Run before EVERY
+# Pure-Python guardrails (~4 s, no Spark): registry/COVERAGE.md sync,
+# the 50-name lexical-window invariant and the in-process write commit
+# tests (tests/test_dynamo_commit.py). Run before EVERY
 # commit that touches registry.py, COVERAGE.md, or adds a query —
 # round 6's snapshot commit skipped these and shipped 2 red tests.
 # A test rename breaks this target loudly (pinned node id) — that is
@@ -9,7 +10,7 @@
 check-fast:
 	python -m pytest tests/test_coverage_sync.py tests/test_coverage_index.py \
 	  "tests/test_properties.py::test_driver_window_holds_exactly_50_unprefixed_names" \
-	  -q
+	  tests/test_dynamo_commit.py -q
 
 test:
 	python -m pytest tests/ -x -q

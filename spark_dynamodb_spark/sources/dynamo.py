@@ -14,12 +14,17 @@ Capability parity map (reference file → here):
 - DynamoBatchWriter (A11 put) / update (A12) /      → DynamoWriter modes
   delete (A13)
 
-Deliberate deviations from the reference (documented, strictly better):
-- The write commit is ATOMIC (staged files + driver-side merge + dir
-  swap); the reference's BatchWriteItem is at-least-once with no
-  rollback (SURVEY §3 entry point 2).
-- GSIs are refreshed synchronously on commit; DynamoDB replicates
-  asynchronously.
+Deliberate deviations from the reference:
+- A write is one commit: executors stage files, the driver merges them
+  with the store and rewrites it. A write that fails before commit()
+  changes nothing (the reference's BatchWriteItem is at-least-once
+  with no rollback, SURVEY §3 entry point 2). The rewrite itself is
+  not atomic: each directory (the base data, then every GSI) is
+  replaced on its own with rmtree + rename, so a concurrent reader can
+  see a new base with an old GSI, or miss files mid-swap, and two
+  concurrent writers can lose one of their updates.
+- GSIs are rewritten by the same commit, right after the base;
+  DynamoDB replicates them asynchronously.
 
 Scale story: locally the "table" is a parquet/jsonl segment directory;
 in production the same reader shape points each InputPartition at a
@@ -401,26 +406,11 @@ class DynamoReader(DataSourceReader):
             expr = e if expr is None else (expr & e)
         cols = [f.name for f in self.schema_.fields]
         dset = pds.dataset(seg["files"], format="parquet")
-        import pyarrow as pa
-
+        # Every writer stores timestamps as micros, the unit Spark's
+        # Arrow ingestion takes, so batches go to Spark as read.
         for batch in dset.to_batches(columns=cols, filter=expr):
             if batch.num_rows == 0:
                 continue
-            # Defensive: Spark's Arrow ingestion rejects ns timestamps
-            # (e.g. INT96-written files) — downcast to micros.
-            if any(
-                pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-                for f in batch.schema
-            ):
-                fixed = pa.schema(
-                    [
-                        pa.field(f.name, pa.timestamp("us", f.type.tz))
-                        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-                        else f
-                        for f in batch.schema
-                    ]
-                )
-                batch = batch.cast(fixed)
             # Consumed capacity ≈ bytes scanned / bytesPerRCU (A8). Like
             # DynamoDB, a server-side filter reduces transfer, not RCU —
             # we account the unfiltered batch size upstream of the filter
@@ -489,13 +479,166 @@ class StagedFile(WriterCommitMessage):
     rows: int
 
 
+# -- the commit merge: one Arrow pipeline for every write mode --
+#
+# Which rows survive is decided on narrow tables that hold only the key
+# columns and a row ordinal (pyarrow's join rejects list and map payload
+# columns); whole rows are then gathered with Table.take. No value
+# leaves Arrow, so int64 above 2^53, NaN and nested payloads are
+# written back exactly as they were read.
+
+def _conform(t: "pa.Table", schema: "pa.Schema") -> "pa.Table":
+    """Safe-cast ``t`` to ``schema``; columns it lacks become nulls."""
+    import pyarrow as pa
+
+    return pa.Table.from_arrays(
+        [
+            t[f.name].cast(f.type) if f.name in t.column_names
+            else pa.nulls(t.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def _with_row(t: "pa.Table", cols: list[str], name: str) -> "pa.Table":
+    """``cols`` of ``t`` plus its row ordinal as column ``name``."""
+    import numpy as np
+    import pyarrow as pa
+
+    return t.select(cols).append_column(name, pa.array(np.arange(t.num_rows)))
+
+
+def _pick(t: "pa.Table", key_cols: list[str], how: str, name: str) -> "pa.Table":
+    """Per key, the first (``how="min"``) or last (``"max"``) row of
+    ``t``: the key columns plus that row's ordinal as ``name``."""
+    import pyarrow as pa
+
+    out = _with_row(t, key_cols, name).group_by(key_cols, use_threads=False).aggregate(
+        [(name, how)]
+    )
+    return pa.table({**{k: out[k] for k in key_cols}, name: out[f"{name}_{how}"]})
+
+
+def _update(base: "pa.Table", staged: "pa.Table", key_cols: list[str]) -> "pa.Table":
+    """UpdateItem SET semantics (A12): per key, the last staged row's
+    non-null attributes override the item's, null attributes keep it;
+    new keys insert. Only null means absent — a staged NaN is a value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    j = _pick(base, key_cols, "max", "_b").join(
+        _pick(staged, key_cols, "max", "_s"), key_cols,
+        join_type="full outer", use_threads=False,
+    )
+    b, s = base.take(j["_b"]), staged.take(j["_s"])
+    return pa.Table.from_arrays(
+        [pc.coalesce(s[c], b[c]) for c in base.column_names], schema=base.schema
+    )
+
+
+def merge(
+    base: "pa.Table | None",
+    staged: "pa.Table",
+    key_cols: list[str],
+    mode: str,
+    version_col: str = "version",
+) -> "pa.Table":
+    """The table a commit writes: ``staged`` merged into ``base`` (None
+    when the table has no files or is overwritten) under one write mode.
+
+    - put: whole-item replace, the last staged row per key wins (A11).
+    - put_if_absent: staged items insert only where the key is absent;
+      existing items are untouched — DynamoDB's attribute_not_exists
+      with skip-on-conflict batch semantics (A19).
+    - transact_put_if_absent: if ANY staged key exists the whole batch
+      raises TransactionCanceledException before anything is written
+      (A24); otherwise a put.
+    - update: SET semantics, see ``_update`` (A12).
+    - versioned_update: optimistic locking (A23). A staged row carries
+      the version it EXPECTS the item to have; rows whose expectation is
+      stale or whose key is absent are skipped, winners apply as an
+      update and bump the version by one.
+    - delete: the items whose key is staged are removed (A13); only the
+      key columns of ``staged`` are read.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if base is None:
+        base = staged.schema.empty_table()
+    # One column order for every mode: base columns in base order, then
+    # staged-only columns in staged order (a delete writes none). Every
+    # field is nullable, since an item may lack any attribute.
+    fields = list(base.schema)
+    if mode != "delete":
+        fields += [f for f in staged.schema if f.name not in base.column_names]
+    schema = pa.schema([f.with_nullable(True) for f in fields])
+    base = _conform(base, schema)
+    if mode == "delete":
+        keys = _conform(staged, pa.schema([schema.field(k) for k in key_cols]))
+        keep = _with_row(base, key_cols, "_b").join(
+            keys, key_cols, join_type="left anti", use_threads=False
+        )["_b"]
+        return base.take(np.sort(keep.to_numpy()))
+    if mode == "versioned_update" and version_col not in staged.column_names:
+        return base
+    staged = _conform(staged, schema)
+    if mode == "versioned_update":
+        ok = _with_row(staged, key_cols + [version_col], "_s").join(
+            base.select(key_cols + [version_col]), key_cols + [version_col],
+            join_type="left semi", use_threads=False,
+        )["_s"]
+        staged = staged.take(np.sort(ok.to_numpy()))
+        i = schema.get_field_index(version_col)
+        bumped = pc.add(staged[version_col], pa.scalar(1, schema.field(i).type))
+        return _update(base, staged.set_column(i, schema.field(i), bumped), key_cols)
+    if mode == "update":
+        return _update(base, staged, key_cols)
+    if mode == "transact_put_if_absent":
+        hits = staged.select(key_cols).join(
+            base.select(key_cols), key_cols, join_type="left semi", use_threads=False
+        ).num_rows
+        if hits:
+            raise TransactionCanceledException(
+                f"{hits} staged key(s) already exist "
+                f"(ConditionalCheckFailed inside a transaction): batch rejected"
+            )
+    both = pa.concat_tables([base, staged])
+    how = "min" if mode == "put_if_absent" else "max"
+    return both.take(_pick(both, key_cols, how, "_row")["_row"])
+
+
+def _segment_ids(col: "pa.ChunkedArray", n_segments: int):
+    """The segment file of every value of a partition-key column:
+    pandas' hash of the column as pandas holds it, the placement every
+    commit has used, so a key stays in the file it is already in."""
+    import pandas as pd
+
+    return pd.util.hash_pandas_object(col.to_pandas(), index=False).to_numpy() % n_segments
+
+
+def _as_set(col: "pa.ChunkedArray"):
+    """DynamoDB set types (SS/NS/BS) are unique on write (SURVEY §1.2):
+    each list of a declared set column is deduped and sorted."""
+    import pyarrow as pa
+
+    if not pa.types.is_list(col.type):
+        return col
+    return pa.array(
+        [v if v is None else sorted(set(v)) for v in col.to_pylist()], col.type
+    )
+
+
 class DynamoWriter(DataSourceWriter):
     """Batch writer with put/update/delete modes.
 
     Executors stage Arrow/parquet batches (rate-limited on WCU in
-    writeBatchSize chunks, mirroring 25-item BatchWriteItem); the
-    driver merges staged data into the keyed store atomically in
-    commit() — see module docstring for the production mapping.
+    writeBatchSize chunks, mirroring 25-item BatchWriteItem); commit()
+    merges the staged items into the keyed store on the driver and
+    rewrites it — see the module docstring for what a reader can see
+    while that rewrite runs, and for the production mapping.
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -564,84 +707,33 @@ class DynamoWriter(DataSourceWriter):
         pq.write_table(table, path)
         return StagedFile(path=path, rows=n)
 
-    # -- driver-side atomic merge --
+    # -- driver-side merge --
     def commit(self, messages: list[StagedFile]) -> None:
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        meta = self.meta
-        key_cols = [meta["hash_key"]] + (
-            [meta["range_key"]] if meta.get("range_key") else []
-        )
-        staged_paths = [m.path for m in messages if m and m.rows >= 0]
-        staged = (
-            pd.concat([pq.read_table(p).to_pandas() for p in staged_paths])
-            if staged_paths
-            else pd.DataFrame()
-        )
-        base_files = keyed_store.list_segments(self.store_dir, self.table)
-        base = (
-            pd.concat([pq.read_table(p).to_pandas() for p in base_files])
-            if base_files and not self.overwrite
-            else pd.DataFrame()
-        )
-        # DynamoDB set types (SS/NS/BS) enforce uniqueness on write
-        # (SURVEY §1.2) — sort+dedup declared set columns in the
-        # incoming items before merging.
-        def as_set(v):
-            if v is None or isinstance(v, (str, bytes)):
-                return v
-            if hasattr(v, "tolist"):  # numpy array from parquet
-                v = v.tolist()
-            if isinstance(v, (list, tuple)):
-                return sorted(set(v))
-            return v
-
-        for col in self.meta.get("set_columns", []):
-            if not staged.empty and col in staged.columns:
-                staged[col] = staged[col].map(as_set)
-        if self.mode == "delete":
-            merged = self._merge_delete(base, staged, key_cols)
-        elif self.mode == "update":
-            merged = self._merge_update(base, staged, key_cols)
-        elif self.mode == "versioned_update":
-            merged = self._merge_versioned_update(
-                base, staged, key_cols, _opt(self.options, "versionColumn", "version")
-            )
-        elif self.mode == "put_if_absent":
-            merged = self._merge_put_if_absent(base, staged, key_cols)
-        elif self.mode == "transact_put_if_absent":
-            merged = self._merge_transact_put_if_absent(base, staged, key_cols)
-        else:
-            merged = self._merge_put(base, staged, key_cols)
-        # The rewrite schema must come from the MERGED frame, not the
-        # staged input: a key-only delete or partial-column update
-        # carries a column subset, and serializing with the writer's
-        # input schema would silently drop every unmentioned attribute
-        # table-wide (ADVICE r1). Base dtypes win for base columns;
-        # staged dtypes cover newly-added attributes.
-        arrow_schema = self._merged_arrow_schema(
-            base_files if not self.overwrite else [], list(merged.columns)
-        )
-        self._rewrite(merged, key_cols, arrow_schema)
-        self._cleanup(staged_paths)
-
-    def _merged_arrow_schema(self, base_files: list[str], merged_cols: list[str]):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.dataset as pds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        staged_schema = to_arrow_schema(self.schema_)
-        base_schema = pq.read_schema(base_files[0]) if base_files else None
-        fields = []
-        for c in merged_cols:
-            if base_schema is not None and c in base_schema.names:
-                fields.append(base_schema.field(c))
-            elif c in staged_schema.names:
-                fields.append(staged_schema.field(c))
-            else:  # unreachable: merged columns come from base ∪ staged
-                fields.append(pa.field(c, pa.string()))
-        return pa.schema(fields)
+        key_cols = [self.meta["hash_key"]] + (
+            [self.meta["range_key"]] if self.meta.get("range_key") else []
+        )
+        staged_paths = [m.path for m in messages if m]
+        staged = pds.dataset(
+            staged_paths, format="parquet", schema=to_arrow_schema(self.schema_)
+        ).to_table()
+        for col in self.meta.get("set_columns", []):
+            if col in staged.column_names:
+                i = staged.schema.get_field_index(col)
+                staged = staged.set_column(i, col, _as_set(staged[col]))
+        base_files = (
+            [] if self.overwrite
+            else keyed_store.list_segments(self.store_dir, self.table)
+        )
+        base = pds.dataset(base_files, format="parquet").to_table() if base_files else None
+        merged = merge(
+            base, staged, key_cols, self.mode,
+            _opt(self.options, "versionColumn", "version"),
+        )
+        self._rewrite(merged, key_cols)
+        self._cleanup(staged_paths)
 
     def abort(self, messages: list[StagedFile]) -> None:
         self._cleanup([m.path for m in messages if m])
@@ -655,162 +747,41 @@ class DynamoWriter(DataSourceWriter):
         if os.path.isdir(self.staging) and not os.listdir(self.staging):
             shutil.rmtree(self.staging, ignore_errors=True)
 
-    @staticmethod
-    def _merge_put(base, staged, key_cols):
-        """PutItem: whole-item replace, staged wins (A11)."""
-        import pandas as pd
-
-        if base.empty:
-            merged = staged
-        else:
-            merged = pd.concat([base, staged], ignore_index=True)
-        if merged.empty:
-            return merged
-        return merged.drop_duplicates(subset=key_cols, keep="last")
-
-    @staticmethod
-    def _merge_put_if_absent(base, staged, key_cols):
-        """Conditional PutItem with attribute_not_exists(pk) (A19):
-        staged items insert ONLY where the key is absent; existing
-        items are untouched (DynamoDB would reject the put with
-        ConditionalCheckFailedException — batch semantics here are
-        skip-on-conflict, the idempotent-backfill shape). keep="first"
-        with base concatenated first is exactly that rule."""
-        import pandas as pd
-
-        if base.empty:
-            merged = staged
-        else:
-            merged = pd.concat([base, staged], ignore_index=True)
-        if merged.empty:
-            return merged
-        return merged.drop_duplicates(subset=key_cols, keep="first")
-
-    @classmethod
-    def _merge_transact_put_if_absent(cls, base, staged, key_cols):
-        """TransactWriteItems all-or-nothing conditional put (A24):
-        every staged item carries attribute_not_exists(pk); if ANY key
-        already exists the WHOLE batch is rejected — DynamoDB raises
-        TransactionCanceledException and no item applies. (Contrast
-        A19's per-item skip-on-conflict.) Raised before any rewrite,
-        so the store is untouched on cancellation."""
-        if base.empty or staged.empty:
-            return cls._merge_put(base, staged, key_cols)
-        collisions = staged[key_cols].merge(base[key_cols], on=key_cols)
-        if not collisions.empty:
-            raise TransactionCanceledException(
-                f"{len(collisions)} staged key(s) already exist "
-                f"(ConditionalCheckFailed inside a transaction): batch rejected"
-            )
-        return cls._merge_put(base, staged, key_cols)
-
-    @staticmethod
-    def _merge_update(base, staged, key_cols):
-        """UpdateItem SET semantics: non-null staged attributes override,
-        null/absent attributes keep existing values; new keys insert
-        (A12 — nulls are skipped, like the reference's update writer)."""
-        import pandas as pd
-
-        if base.empty:
-            return staged
-        if staged.empty:
-            return base
-        staged = staged.drop_duplicates(subset=key_cols, keep="last")
-        b = base.set_index(key_cols)
-        s = staged.set_index(key_cols)
-        # Column union, base order first: a partial-column update leaves
-        # unmentioned base attributes intact, and an update may also ADD
-        # a new attribute (UpdateItem SET on a fresh name) — base rows
-        # get null for it.
-        all_cols = list(b.columns) + [c for c in s.columns if c not in b.columns]
-        s = s.reindex(columns=all_cols)
-        # Integer/bool columns must NOT round-trip through float64 —
-        # combine_first promotes any column that acquires NaN (absent
-        # patch attrs, skipped-null cells, inserted keys), and a
-        # float64 detour silently rounds int64 values above 2^53
-        # (snowflake-style ids). Merge those columns as object dtype
-        # (exact Python ints + None); the Arrow schema cast in
-        # _rewrite restores the real types losslessly.
-        exact_cols = [
-            c
-            for c in all_cols
-            if (c in b.columns and b[c].dtype.kind in "iub")
-            or (c in s.columns and str(s[c].dtype) != "object" and s[c].dtype.kind in "iub")
-        ]
-        for c in exact_cols:
-            if c in b.columns:
-                b[c] = b[c].astype(object)
-            if c in s.columns:
-                s[c] = s[c].astype(object)
-        updated = s.combine_first(b) if not s.empty else b
-        updated = updated.reindex(columns=all_cols)
-        # combine_first aligns on the union of index values: existing
-        # rows keep non-overridden attrs, new keys insert with nulls.
-        return updated.reset_index()
-
-    @classmethod
-    def _merge_versioned_update(cls, base, staged, key_cols, vcol):
-        """Optimistic-locking UpdateItem (A23): each staged row carries
-        the version it EXPECTS the item to have (DynamoDB spelling:
-        ConditionExpression ``#v = :expected`` with ``SET #v =
-        :expected + 1``). Staged rows whose expectation is stale — or
-        whose key does not exist — are skipped (the per-item
-        ConditionalCheckFailedException, batch semantics skip-on-
-        conflict like A19); winners apply SET semantics and bump the
-        version. Lost-update protection without read-locks."""
-        if base.empty or staged.empty or vcol not in staged.columns:
-            return base
-        cur = base[key_cols + [vcol]].rename(columns={vcol: "_cur_version"})
-        joined = staged.merge(cur, on=key_cols, how="inner")
-        valid = joined[joined[vcol] == joined["_cur_version"]].drop(
-            columns=["_cur_version"]
-        )
-        if valid.empty:
-            return base
-        valid = valid.copy()
-        valid[vcol] = valid[vcol] + 1
-        return cls._merge_update(base, valid, key_cols)
-
-    @staticmethod
-    def _merge_delete(base, staged, key_cols):
-        """DeleteItem by key: anti-join of the store vs staged keys (A13)."""
-        if base.empty or staged.empty:
-            return base
-        keys = staged[key_cols].drop_duplicates()
-        marked = base.merge(keys, on=key_cols, how="left", indicator=True)
-        return marked[marked["_merge"] == "left_only"].drop(columns="_merge")
-
-    def _rewrite(self, merged, key_cols, arrow_schema) -> None:
-        """Atomically replace data segments (+ GSIs) with the merged table."""
-        import pandas as pd
+    def _rewrite(self, merged: "pa.Table", key_cols: list[str]) -> None:
+        """Replace the data directory, then each GSI directory, with the
+        merged table. Each directory is swapped by rmtree + rename on
+        its own, so the base and its GSIs are not replaced together."""
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         import shutil
 
         n_seg = int(self.meta.get("n_segments", 8))
 
-        def write_dir(df: pd.DataFrame, out: str, part_key: str, sort_keys: list[str]):
+        def write_dir(out: str, part_key: str, sort_keys: list[str]) -> None:
             tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
             os.makedirs(tmp, exist_ok=True)
-            if df.empty:
-                pq.write_table(
-                    pa.Table.from_pylist([], schema=arrow_schema),
-                    os.path.join(tmp, "part-00000.parquet"),
-                )
+            if merged.num_rows == 0:
+                pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
             else:
-                seg = pd.util.hash_pandas_object(df[part_key], index=False) % n_seg
-                for i, chunk in df.groupby(seg):
-                    chunk = chunk.sort_values(sort_keys)
-                    pq.write_table(
-                        pa.Table.from_pandas(chunk, schema=arrow_schema, preserve_index=False),
-                        os.path.join(tmp, f"part-{int(i):05d}.parquet"),
-                    )
+                seg = _segment_ids(merged[part_key], n_seg)
+                order = merged.select(sort_keys).append_column("_seg", pa.array(seg))
+                rows = merged.take(pc.sort_indices(
+                    order, [("_seg", "ascending")] + [(k, "ascending") for k in sort_keys]
+                ))
+                start = 0
+                for i, n in enumerate(np.bincount(seg.astype(np.int64), minlength=n_seg)):
+                    if n:
+                        pq.write_table(
+                            rows.slice(start, n), os.path.join(tmp, f"part-{i:05d}.parquet")
+                        )
+                        start += n
             if os.path.isdir(out):
                 shutil.rmtree(out)
             os.rename(tmp, out)
 
         write_dir(
-            merged,
             keyed_store.data_dir(self.store_dir, self.table),
             self.meta["hash_key"],
             key_cols,
@@ -820,7 +791,6 @@ class DynamoWriter(DataSourceWriter):
                 [gsi["range_key"]] if gsi.get("range_key") else []
             )
             write_dir(
-                merged,
                 keyed_store.data_dir(self.store_dir, self.table, gsi["name"]),
                 gsi["hash_key"],
                 gsi_keys,
@@ -1012,7 +982,7 @@ class DynamoSimpleStreamReader(SimpleDataSourceStreamReader):
 
 class DynamoStreamWriter(DataSourceStreamWriter):
     """Streaming SINK (``writeStream.format("dynamo")``) — every
-    micro-batch runs the same staged-write + atomic-merge protocol as
+    micro-batch runs the same staged-write + driver-merge commit as
     the batch writer (put replaces whole items, ``update``/``delete``
     options select the other merge modes). Idempotent under batch
     retries for put/update: re-merging the same keyed items is a

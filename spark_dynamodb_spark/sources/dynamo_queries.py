@@ -474,8 +474,8 @@ def dynamo_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s19: streaming SINK on the dynamo source — a per-user running
     aggregate written with ``writeStream.format("dynamo")`` in
     complete mode: each micro-batch's state upserts into the keyed store
-    through the same atomic staged-merge as the batch writer (retried
-    batches re-merge idempotently). The oracle reads the final store
+    through the same staged-write + driver-merge commit as the batch
+    writer (retried batches re-merge idempotently). The oracle reads the final store
     content back: one item per user carrying the event count and the
     LAST event's value (max_by over the full history) — the
     materialized-view-in-a-KV-table pattern the reference's users
@@ -793,7 +793,7 @@ def dynamo_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     effectively-once, same as s19.
 
     Scale shape: each micro-batch moves one shard-page of rows; the
-    sink stages and atomically merges only that batch's keys; nothing
+    sink stages and merges only that batch's keys; nothing
     accumulates driver-side and no state store is needed at all
     (stateless passthrough query).
     """

@@ -14,7 +14,10 @@ The reference's table semantics mapped here (SURVEY §1.1):
 - sort key → rows sorted by (hash_key, range_key) within segments
   (``sortWithinPartitions``);
 - GSI → a *materialized* copy re-partitioned by the index keys, like
-  DynamoDB's async-replicated index (``connector/TableIndexConnector``);
+  DynamoDB's async-replicated index (``connector/TableIndexConnector``).
+  Every write commit rewrites each GSI directory right after the base
+  one; the two swaps are separate, so a reader between them sees the
+  new base with the old index;
 - provisioned RCU/WCU → stored in _meta.json, consumed by the reader/
   writer token buckets;
 - schemalessness → optional jsonl format whose schema only exists by
@@ -143,23 +146,3 @@ def create_table(
     }
     write_meta(store_dir, table, meta)
     return meta
-
-
-def refresh_gsis(spark: SparkSession, table: str, store_dir: str = DEFAULT_STORE_DIR) -> None:
-    """Re-materialize every GSI from the base data (DynamoDB replicates
-    GSIs asynchronously; our writer calls this synchronously on commit —
-    strictly stronger consistency, documented deviation)."""
-    meta = read_meta(store_dir, table)
-    if not meta.get("gsis"):
-        return
-    base = spark.read.parquet(data_dir(store_dir, table))
-    tdir = os.path.join(store_dir, table)
-    for gsi in meta["gsis"]:
-        out = os.path.join(tdir, "gsi", gsi["name"])
-        tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
-        _write_partitioned(
-            base, gsi["hash_key"], gsi.get("range_key"), tmp, meta["n_segments"]
-        )
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)

@@ -370,11 +370,13 @@ def test_partial_update_preserves_large_ints(spark):
     skipped-null) integer attributes through float64 (code-review r2:
     combine_first promotes NaN-bearing columns and silently rounds
     snowflake-style ids)."""
+    import math
+
     name = "t_bigint_upd"
     big = 9007199254740993  # 2^53 + 1: unrepresentable in float64
+    ddl = "pk long, ref_id long, tag string, score double"
     base = spark.createDataFrame(
-        [(1, big, "a"), (2, big + 2, "b")],
-        "pk long, ref_id long, tag string",
+        [(1, big, "a", 0.5), (2, big + 2, "b", float("nan"))], ddl
     )
     keyed_store.create_table(spark, base, name, hash_key="pk", n_segments=1)
     # patch touches only `tag` for pk=1, and INSERTS pk=3 (forces NaN
@@ -386,8 +388,63 @@ def test_partial_update_preserves_large_ints(spark):
     rows = {r.pk: r for r in read_dynamo(spark, name).collect()}
     assert rows[1].ref_id == big  # exact, not 9007199254740992.0
     assert rows[2].ref_id == big + 2
+    assert math.isnan(rows[2].score)  # a NaN is a value, not a null
     assert rows[1].tag == "patched" and rows[3].tag == "new"
     assert rows[3].ref_id is None
+    # ref_id now holds a null (pk=3): later commits must still leave
+    # every item they were not asked to change bit-identical
+    write_dynamo(spark.createDataFrame([(4, big + 4, "put", 1.0)], ddl), name)
+    write_dynamo(spark.createDataFrame([(3,)], "pk long"), name, delete=True)
+    rows = {r.pk: r for r in read_dynamo(spark, name).collect()}
+    assert set(rows) == {1, 2, 4}
+    assert (rows[1].ref_id, rows[2].ref_id, rows[4].ref_id) == (big, big + 2, big + 4)
+    assert math.isnan(rows[2].score) and rows[1].score == 0.5
+
+
+def test_update_keeps_column_order(spark):
+    """Base columns keep their order and staged-only ones follow: an
+    update on a table stored as [tag, pk] must not move pk first."""
+    name = "t_col_order"
+    base = spark.createDataFrame([("a", 1), ("b", 2)], "tag string, pk long")
+    keyed_store.create_table(spark, base, name, hash_key="pk", n_segments=2)
+    assert read_dynamo(spark, name).columns == ["tag", "pk"]
+    patch = spark.createDataFrame([(1, 7, "p")], "pk long, extra long, tag string")
+    write_dynamo(patch, name, update=True)
+    back = read_dynamo(spark, name)
+    assert back.columns == ["tag", "pk", "extra"]
+    assert sorted(map(tuple, back.collect())) == [("b", 2, None), ("p", 1, 7)]
+
+
+def test_every_writer_stores_timestamps_as_micros(spark):
+    """create_table, put and update all leave timestamp[us] in every
+    data and GSI file — the unit Spark's Arrow ingestion takes, so the
+    reader hands batches over without a cast."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    name = "t_ts_micros"
+    ddl = "pk long, kind string, ts timestamp"
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    keyed_store.create_table(
+        spark, spark.createDataFrame([(1, "click", t0)], ddl), name,
+        hash_key="pk", n_segments=2, gsis=[{"name": "by_kind", "hash_key": "kind"}],
+    )
+
+    def units() -> set:
+        files = keyed_store.list_segments(keyed_store.DEFAULT_STORE_DIR, name)
+        files += keyed_store.list_segments(keyed_store.DEFAULT_STORE_DIR, name, "by_kind")
+        assert len(files) >= 2
+        return {pq.read_schema(f).field("ts").type.unit for f in files}
+
+    assert units() == {"us"}
+    t1 = t0 + dt.timedelta(microseconds=1)
+    write_dynamo(spark.createDataFrame([(2, "view", t1)], ddl), name)
+    assert units() == {"us"}
+    write_dynamo(spark.createDataFrame([(1, t1)], "pk long, ts timestamp"), name, update=True)
+    assert units() == {"us"}
+    rows = {r.pk: r for r in read_dynamo(spark, name).collect()}
+    assert rows[1].ts == t1 and rows[1].kind == "click" and rows[2].ts == t1
 
 
 def test_eval_doc_unhandled_filter_fails_closed():

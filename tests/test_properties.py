@@ -4,10 +4,10 @@ example-based suite (SURVEY §5)."""
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from spark_dynamodb_spark.sources.dynamo import DynamoWriter
+from spark_dynamodb_spark.sources.dynamo import merge
 from spark_dynamodb_spark.sources.rate_limiter import TokenBucket, partition_rate
 
 keys = st.integers(min_value=0, max_value=9)
@@ -15,35 +15,34 @@ vals = st.one_of(st.none(), st.integers(min_value=-100, max_value=100))
 rows = st.lists(st.tuples(keys, vals, vals), max_size=12)
 
 
-def _df(data):
-    return pd.DataFrame(data, columns=["pk", "a", "b"]).astype(
-        {"pk": "int64", "a": "object", "b": "object"}
+def _tbl(data, names=("pk", "a", "b")):
+    return pa.table(
+        {n: pa.array([r[i] for r in data], pa.int64()) for i, n in enumerate(names)}
     )
+
+
+def _items(merged, names=("pk", "a", "b")) -> dict:
+    """key -> the other attributes; a later row for a key wins."""
+    return {r[names[0]]: tuple(r[n] for n in names[1:]) for r in merged.to_pylist()}
 
 
 @settings(max_examples=200, deadline=None)
 @given(base=rows, staged=rows)
 def test_merge_put_replaces_whole_item(base, staged):
-    merged = DynamoWriter._merge_put(_df(base), _df(staged), ["pk"])
+    merged = merge(_tbl(base), _tbl(staged), ["pk"], "put")
     expect: dict = {}
     for pk, a, b in base:
         expect[pk] = (a, b)
     for pk, a, b in staged:
         expect[pk] = (a, b)  # put = whole-item replace, last write wins
-    got = {
-        r.pk: tuple(None if pd.isna(x) else int(x) for x in (r.a, r.b))
-        for r in merged.itertuples()
-    }
-    expect = {
-        k: tuple(None if x is None else int(x) for x in v) for k, v in expect.items()
-    }
-    assert got == expect
+    assert merged.num_rows == len(expect)  # one item per key
+    assert _items(merged) == expect
 
 
 @settings(max_examples=200, deadline=None)
 @given(base=rows, staged=rows)
 def test_merge_update_skips_nulls(base, staged):
-    merged = DynamoWriter._merge_update(_df(base), _df(staged), ["pk"])
+    merged = merge(_tbl(base), _tbl(staged), ["pk"], "update")
     expect: dict = {}
     for pk, a, b in base:
         expect[pk] = (a, b)
@@ -54,27 +53,19 @@ def test_merge_update_skips_nulls(base, staged):
     for pk, (a, b) in last.items():
         olda, oldb = expect.get(pk, (None, None))
         expect[pk] = (a if a is not None else olda, b if b is not None else oldb)
-    got = {r.pk: (r.a, r.b) for r in merged.itertuples()}
-    # NaN (pandas null) → None for comparison
-    got = {
-        k: tuple(None if pd.isna(x) else int(x) for x in v) for k, v in got.items()
-    }
-    expect = {
-        k: tuple(None if x is None else int(x) for x in v) for k, v in expect.items()
-    }
-    assert got == expect
+    assert merged.num_rows == len(expect)  # one item per key
+    assert _items(merged) == expect
 
 
 @settings(max_examples=200, deadline=None)
 @given(base=rows, staged=rows)
 def test_merge_delete_removes_only_staged_keys(base, staged):
-    merged = DynamoWriter._merge_delete(_df(base), _df(staged), ["pk"])
+    merged = merge(_tbl(base), _tbl(staged), ["pk"], "delete")
     doomed = {pk for pk, _, _ in staged}
-    # put-free base: drop_duplicates not applied by delete — every base
-    # row whose key isn't staged must survive, all others must be gone.
+    # delete dedups nothing: every base row whose key isn't staged must
+    # survive, all others must be gone.
     survivors = [pk for pk, _, _ in base if pk not in doomed]
-    got = list(merged["pk"]) if not merged.empty else []
-    assert sorted(got) == sorted(survivors)
+    assert sorted(merged["pk"].to_pylist()) == sorted(survivors)
 
 
 @settings(max_examples=50, deadline=None)
@@ -352,15 +343,15 @@ def test_merge_versioned_update_optimistic_locking(base, staged):
     """a23 invariants: a staged row applies iff its expected version
     equals the store's; winners bump the version by one; stale rows
     and absent keys change nothing."""
-    b = pd.DataFrame(base, columns=["pk", "version", "val"]).astype("int64")
-    s = pd.DataFrame(staged, columns=["pk", "version", "val"]).astype("int64")
-    merged = DynamoWriter._merge_versioned_update(b, s, ["pk"], "version")
+    names = ("pk", "version", "val")
+    merged = merge(
+        _tbl(base, names), _tbl(staged, names), ["pk"], "versioned_update", "version"
+    )
     cur = {pk: (v, val) for pk, v, val in base}
     for pk, expected, val in staged:
         if pk in cur and cur[pk][0] == expected:
             cur[pk] = (expected + 1, val)
-    got = {int(r.pk): (int(r.version), int(r.val)) for r in merged.itertuples()}
-    assert got == cur
+    assert _items(merged, names) == cur
 
 
 def test_interval_merge_islands_disjoint(spark, sf_dir):

@@ -39,6 +39,9 @@ Read options (reference names preserved, SURVEY §2 Part A):
   bytesPerRCU (4000), filterPushdown (true), throughput (100 —
   on-demand default), columns (projection: comma-separated),
   region/roleArn (no-op shims).
+  Without readPartitions, a read whose pushed filters name the hash key
+  (EqualTo or In: GetItem, Query, BatchGetItem) is one segment, like the
+  reference's one keyed request; a scan is sized from the table bytes.
 Write options: writeBatchSize (25), targetCapacity, update, delete, putIfAbsent,
 versionedUpdate (+versionColumn), transactPutIfAbsent (all-or-nothing),
   throughput, bytesPerWCU (1000).
@@ -320,6 +323,21 @@ def _matches_doc(f: Filter, doc: dict) -> bool:
 # Reader (A4/A5/A6/A7/A8)
 # ---------------------------------------------------------------------------
 
+def _key_schema(meta: dict, table: str, index_name: str | None) -> dict:
+    """The read's key schema: the table's ``meta``, or the entry of GSI
+    ``index_name`` in it (A5)."""
+    if not index_name:
+        return meta
+    gsis = meta.get("gsis", [])
+    for gsi in gsis:
+        if gsi["name"] == index_name:
+            return gsi
+    names = ", ".join(g["name"] for g in gsis) or "none"
+    raise ValueError(
+        f"dynamo table '{table}' has no index '{index_name}' (indexes: {names})"
+    )
+
+
 def scan_segment(idx: int, total: int, files: list[str], rate: float) -> InputPartition:
     """One scan segment: Segment=idx, TotalSegments=total (A4).
     rate = capacity units/sec for this partition; 0 = unlimited."""
@@ -336,6 +354,7 @@ class DynamoReader(DataSourceReader):
         self.store_dir = _opt(options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
         self.index_name = _opt(options, "indexName")
         self.meta = keyed_store.read_meta(self.store_dir, self.table)
+        self.hash_key = _key_schema(self.meta, self.table, self.index_name)["hash_key"]
         self.fmt = self.meta.get("format", "parquet")
         self.pushed: list[Filter] = []
         self.filter_pushdown = _bool_opt(options, "filterPushdown", True)
@@ -352,12 +371,24 @@ class DynamoReader(DataSourceReader):
                 yield f  # post-scan residual, Spark re-evaluates
 
     def partitions(self) -> list[InputPartition]:
+        """Plan the scan segments (A4). ``readPartitions`` wins. Otherwise
+        a read whose pushed filters pin the hash key with EqualTo or In
+        (GetItem, Query, BatchGetItem) is one segment with the whole
+        capacity budget, and a scan is sized from the table bytes. The
+        one segment still reads every file, with the key filter pushed
+        into each, until keys are routed to files (ROADMAP.md,
+        key-routed planning)."""
         files = keyed_store.list_segments(self.store_dir, self.table, self.index_name)
         if not files:
             return [scan_segment(0, 1, [], 0.0)]
         n_opt = _opt(options=self.options, key="readPartitions")
         if n_opt is not None:
             n = max(1, int(n_opt))
+        elif any(
+            isinstance(f, (EqualTo, In)) and f.attribute == (self.hash_key,)
+            for f in self.pushed
+        ):
+            n = 1
         else:
             # segments = f(table bytes / target partition size), like
             # TableConnector computes TotalSegments from table size.
@@ -818,6 +849,7 @@ class DynamoDataSource(DataSource):
         store_dir = _opt(self.options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
         index_name = _opt(self.options, "indexName")
         meta = keyed_store.read_meta(store_dir, table)
+        _key_schema(meta, table, index_name)  # an unknown index raises here
         segments = keyed_store.list_segments(store_dir, table, index_name)
         if not segments:
             raise ValueError(f"dynamo table '{table}' has no data segments")

@@ -71,6 +71,11 @@ def test_read_partitions_option(spark, customer_kv):
     assert df.rdd.getNumPartitions() == 2
     df4 = read_dynamo(spark, customer_kv)
     assert df4.rdd.getNumPartitions() == 4  # one per segment file
+    # a key lookup is one segment; a non-key filter keeps the file-sized plan
+    key = read_dynamo(spark, customer_kv).filter(F.col("c_custkey") == 1)
+    assert key.rdd.getNumPartitions() == 1
+    scan = read_dynamo(spark, customer_kv).filter(F.col("c_acctbal") > 0)
+    assert scan.rdd.getNumPartitions() == 4
 
 
 def test_projection_option(spark, customer_kv):
@@ -349,6 +354,11 @@ def test_binary_key_pushdown_agreement(spark):
 def test_missing_table_raises_clearly(spark):
     with pytest.raises(Exception, match="(No such file|not exist|_meta)"):
         read_dynamo(spark, "no_such_table_xyz").collect()
+
+
+def test_unknown_index_raises_clearly(spark, customer_kv):
+    with pytest.raises(Exception, match="'t_customer_kv' has no index 'nope' \\(indexes: none\\)"):
+        read_dynamo(spark, customer_kv, indexName="nope").collect()
 
 
 def test_missing_tablename_option_raises(spark):

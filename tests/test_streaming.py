@@ -1048,6 +1048,31 @@ def test_s29_dynamo_backed_state_matches_s28(spark, sf_dir):
     assert not agg["rep_above_gid"]  # rep_id only shrinks from gid
 
 
+def test_s29_zero_microbatches_returns_empty_verdict(spark, tmp_path, monkeypatch):
+    """A stream that produces no micro-batch leaves the seeded (empty)
+    store as the final state and judges no document."""
+    import os
+    import shutil
+
+    from spark_dynamodb_spark.sources import keyed_store
+    from spark_dynamodb_spark.sources.dynamo_queries import _sf_tag
+    from spark_dynamodb_spark.streaming import stream_queries
+
+    empty = tmp_path / "staged"
+    empty.mkdir()
+    monkeypatch.setattr(stream_queries, "_docs_stream_staging", lambda spark, sf: str(empty))
+    sf_dir = str(tmp_path / "sf")
+    try:
+        got = stream_queries.stream_neardup_dynamo_state(spark, sf_dir)
+        assert got.columns == ["doc_id", "is_dup", "canon_id"]
+        assert got.collect() == []
+    finally:
+        shutil.rmtree(
+            os.path.join(keyed_store.DEFAULT_STORE_DIR, f"neardup_groups_{_sf_tag(sf_dir)}"),
+            ignore_errors=True,
+        )
+
+
 def test_s29_collision_guard_counts_both_violation_classes(spark):
     """Round-15 internals change: s29's collision guard rides the
     batch-put job as observe() metrics over `_s29_collision_flag`

@@ -10,7 +10,9 @@ Capability parity map (reference file → here):
 - DynamoScanBuilder/FilterPushdown.scala (A6/A7)    → DynamoReader.pushFilters +
                                                       option("columns", ...)
 - TableConnector rate limiting (A8)                 → rate_limiter.TokenBucket
-- TypeConversion/JavaConverter (A9/A10)             → Arrow RecordBatches both ways
+- TypeConversion/JavaConverter (A9/A10)             → reads: Arrow RecordBatches;
+                                                      writes: Spark Rows → dicts →
+                                                      Arrow (DynamoWriter.write)
 - DynamoBatchWriter (A11 put) / update (A12) /      → DynamoWriter modes
   delete (A13)
 
@@ -26,7 +28,7 @@ Deliberate deviations from the reference:
 - GSIs are rewritten by the same commit, right after the base;
   DynamoDB replicates them asynchronously.
 
-Scale story: locally the "table" is a parquet/jsonl segment directory;
+Scale story: locally the "table" is a parquet segment directory;
 in production the same reader shape points each InputPartition at a
 DynamoDB scan segment (Segment=i, TotalSegments=N) and the writer's
 per-partition buffers become 25-item BatchWriteItem calls. The
@@ -49,7 +51,6 @@ versionedUpdate (+versionColumn), transactPutIfAbsent (all-or-nothing),
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -76,16 +77,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructField, StructType
 
 from spark_dynamodb_spark.sources import keyed_store
 from spark_dynamodb_spark.sources.rate_limiter import (
@@ -97,8 +89,6 @@ from spark_dynamodb_spark.sources.rate_limiter import (
 
 if TYPE_CHECKING:
     import pyarrow as pa
-
-SAMPLE_ROWS = 1000  # ~1 page, mirrors the reference's 1 MB sample scan (A3)
 
 
 def _opt(options, key: str, default=None):
@@ -114,97 +104,6 @@ def _bool_opt(options, key: str, default: bool) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Schema inference by sampling (A3)
-# ---------------------------------------------------------------------------
-
-def _infer_json_type(v):
-    if isinstance(v, bool):
-        return BooleanType()
-    if isinstance(v, int):
-        return LongType()
-    if isinstance(v, float):
-        return DoubleType()
-    if isinstance(v, str):
-        return StringType()
-    if isinstance(v, list):
-        elem = None
-        for x in v:
-            t = _infer_json_type(x)
-            if t is not None:
-                elem = _merge_types(elem, t)
-        return ArrayType(elem or StringType())
-    if isinstance(v, dict):
-        vt = None
-        for x in v.values():
-            t = _infer_json_type(x)
-            if t is not None:
-                vt = _merge_types(vt, t)
-        return MapType(StringType(), vt or StringType())
-    return None  # null → unknown
-
-
-def _merge_types(a, b):
-    """Union two observed attribute types (absent/None yields the other).
-
-    Numeric widening long→double mirrors DynamoDB's single arbitrary-
-    precision N type being inferred as the widest observed (SURVEY §1.2).
-    Irreconcilable types degrade to string, like a JSON re-read would.
-    """
-    if a is None:
-        return b
-    if b is None or a == b:
-        return a
-    if {type(a), type(b)} == {LongType, DoubleType}:
-        return DoubleType()
-    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
-        return ArrayType(_merge_types(a.elementType, b.elementType))
-    if isinstance(a, MapType) and isinstance(b, MapType):
-        return MapType(StringType(), _merge_types(a.valueType, b.valueType))
-    return StringType()
-
-
-def _infer_schema_jsonl(segments: list[str], hash_key: str, range_key: str | None) -> StructType:
-    fields: dict[str, object] = {}
-    order: list[str] = []
-    seen = 0
-    for seg in segments:
-        with open(seg) as f:
-            for line in f:
-                if seen >= SAMPLE_ROWS:
-                    break
-                doc = json.loads(line)
-                for k, v in doc.items():
-                    t = _infer_json_type(v)
-                    if k not in fields:
-                        order.append(k)
-                        fields[k] = t
-                    else:
-                        fields[k] = _merge_types(fields[k], t)
-                seen += 1
-        if seen >= SAMPLE_ROWS:
-            break
-    keys = {hash_key, range_key} if range_key else {hash_key}
-    return StructType(
-        [
-            StructField(k, fields[k] or StringType(), nullable=k not in keys)
-            for k in order
-        ]
-    )
-
-
-def _infer_schema_parquet(segments: list[str], hash_key: str, range_key: str | None) -> StructType:
-    from pyspark.sql.pandas.types import from_arrow_schema
-    import pyarrow.parquet as pq
-
-    arrow_schema = pq.read_schema(segments[0])
-    st = from_arrow_schema(arrow_schema)
-    keys = {hash_key, range_key} if range_key else {hash_key}
-    return StructType(
-        [StructField(f.name, f.dataType, nullable=f.name not in keys) for f in st.fields]
-    )
-
-
-# ---------------------------------------------------------------------------
 # Filter translation (A7) — exactly the reference's translatable set
 # ---------------------------------------------------------------------------
 
@@ -214,109 +113,51 @@ def _to_arrow_expr(f: Filter):
     Returns None when untranslatable — the reference's FilterPushdown
     rejects the same set (StringEndsWith, nested fields, expression
     comparisons → SURVEY §4.1) and Spark re-evaluates them post-scan.
+    A pushed filter is never re-evaluated, so the expression must give
+    Spark's answer under three-valued logic, or the filter stays
+    residual: an In whose values hold a null (Arrow's is_in matches
+    null to null) and a comparison with a NaN literal (Spark makes
+    NaN = NaN). Spark also orders NaN above every other float, so > and
+    >= with a float keep the NaN rows, which IEEE comparison drops.
     """
+    import math
+
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    def col(attr):
-        if len(attr) != 1:  # nested attribute → not translatable
-            return None
-        return pc.field(attr[0])
-
-    if isinstance(f, EqualTo):
-        c = col(f.attribute)
-        return None if c is None else c == f.value
-    if isinstance(f, GreaterThan):
-        c = col(f.attribute)
-        return None if c is None else c > f.value
-    if isinstance(f, GreaterThanOrEqual):
-        c = col(f.attribute)
-        return None if c is None else c >= f.value
-    if isinstance(f, LessThan):
-        c = col(f.attribute)
-        return None if c is None else c < f.value
-    if isinstance(f, LessThanOrEqual):
-        c = col(f.attribute)
-        return None if c is None else c <= f.value
-    if isinstance(f, In):
-        c = col(f.attribute)
-        return None if c is None else c.isin(list(f.value))
-    if isinstance(f, IsNull):
-        c = col(f.attribute)
-        return None if c is None else c.is_null()
-    if isinstance(f, IsNotNull):
-        c = col(f.attribute)
-        return None if c is None else ~c.is_null()
-    if isinstance(f, StringStartsWith):
-        c = col(f.attribute)
-        return None if c is None else pc.starts_with(c, f.value)
-    if isinstance(f, StringContains):
-        c = col(f.attribute)
-        return None if c is None else pc.match_substring(c, f.value)
     if isinstance(f, Not):
         child = _to_arrow_expr(f.child)
         return None if child is None else ~child
+    if len(f.attribute) != 1:  # nested attribute → not translatable
+        return None
+    c, v = pc.field(f.attribute[0]), getattr(f, "value", None)
+    if isinstance(v, float) and math.isnan(v):
+        return None
+    if isinstance(f, EqualTo):
+        return c == v
+    if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+        cmp = c > v if isinstance(f, GreaterThan) else c >= v
+        return (cmp | pc.is_nan(c)) if isinstance(v, float) else cmp
+    if isinstance(f, LessThan):
+        return c < v
+    if isinstance(f, LessThanOrEqual):
+        return c <= v
+    if isinstance(f, In):
+        if None in v:
+            return None
+        # Spark's In matches -0.0 to 0.0, Arrow's hashed is_in does not;
+        # is_in answers false for a null input, where SQL answers null.
+        vals = list(v) + [-x for x in v if isinstance(x, float) and x == 0]
+        return pc.if_else(c.is_null(), pa.scalar(None, pa.bool_()), c.isin(vals))
+    if isinstance(f, IsNull):
+        return c.is_null()
+    if isinstance(f, IsNotNull):
+        return ~c.is_null()
+    if isinstance(f, StringStartsWith):
+        return pc.starts_with(c, v)
+    if isinstance(f, StringContains):
+        return pc.match_substring(c, v)
     return None  # StringEndsWith, EqualNullSafe, anything else
-
-
-def _eval_doc(f: Filter, doc: dict):
-    """Evaluate a pushed filter against a jsonl document with SQL
-    three-valued logic: returns True / False / None (UNKNOWN).
-
-    A missing attribute (or a comparison against NULL) is UNKNOWN, and
-    crucially ``Not(UNKNOWN)`` stays UNKNOWN — so ``NOT(x = v)`` over a
-    document lacking ``x`` does NOT match, mirroring how Spark drops
-    NULL comparisons and how the Arrow expression path behaves. The
-    previous two-valued version returned rows it should exclude
-    (ADVICE r1: pushed filters are not re-evaluated by Spark).
-    """
-
-    def v(attr):
-        return doc.get(attr[0]) if len(attr) == 1 else None
-
-    try:
-        if isinstance(f, Not):
-            child = _eval_doc(f.child, doc)
-            return None if child is None else not child
-        if isinstance(f, IsNull):
-            return v(f.attribute) is None
-        if isinstance(f, IsNotNull):
-            return v(f.attribute) is not None
-        x = v(f.attribute)
-        if x is None or getattr(f, "value", None) is None:
-            return None  # NULL comparison → UNKNOWN
-        if isinstance(f, EqualTo):
-            return x == f.value
-        if isinstance(f, GreaterThan):
-            return x > f.value
-        if isinstance(f, GreaterThanOrEqual):
-            return x >= f.value
-        if isinstance(f, LessThan):
-            return x < f.value
-        if isinstance(f, LessThanOrEqual):
-            return x <= f.value
-        if isinstance(f, In):
-            return x in f.value
-        if isinstance(f, StringStartsWith):
-            return x.startswith(f.value) if isinstance(x, str) else None
-        if isinstance(f, StringContains):
-            return f.value in x if isinstance(x, str) else None
-    except TypeError:
-        return None  # cross-type comparison in a schemaless doc → UNKNOWN
-    # Fail CLOSED on filter types this evaluator does not handle: a
-    # pushed filter is never re-evaluated by Spark, so a permissive
-    # default would silently return unfiltered rows the moment
-    # _to_arrow_expr learns a new filter type that this function does
-    # not (the exact bug class the three-valued rewrite fixed).
-    raise ValueError(
-        f"_eval_doc: unhandled pushed filter {type(f).__name__} — "
-        "extend _eval_doc alongside _to_arrow_expr"
-    )
-
-
-def _matches_doc(f: Filter, doc: dict) -> bool:
-    """A pushed filter keeps a row only when it evaluates to TRUE
-    (UNKNOWN is excluded, like a SQL WHERE clause)."""
-    return _eval_doc(f, doc) is True
 
 
 # ---------------------------------------------------------------------------
@@ -355,7 +196,6 @@ class DynamoReader(DataSourceReader):
         self.index_name = _opt(options, "indexName")
         self.meta = keyed_store.read_meta(self.store_dir, self.table)
         self.hash_key = _key_schema(self.meta, self.table, self.index_name)["hash_key"]
-        self.fmt = self.meta.get("format", "parquet")
         self.pushed: list[Filter] = []
         self.filter_pushdown = _bool_opt(options, "filterPushdown", True)
 
@@ -421,11 +261,9 @@ class DynamoReader(DataSourceReader):
         )
 
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
-        seg = partition.value
-        if self.fmt == "jsonl":
-            yield from self._read_jsonl(seg)
-            return
         import pyarrow.dataset as pds
+
+        seg = partition.value
 
         if not seg["files"]:
             return
@@ -448,52 +286,6 @@ class DynamoReader(DataSourceReader):
             # only approximately via nbytes of the returned batch.
             bucket.acquire(batch.nbytes * self._rcu_factor / bytes_per_rcu)
             yield batch
-
-    def _read_jsonl(self, seg: dict) -> Iterator[tuple]:
-        """Schemaless document scan: item-at-a-time conversion to the
-        fixed query schema (TypeConversion.scala, A9): missing
-        attribute → null, type mismatch → null-on-error."""
-        bytes_per_rcu = float(_opt(self.options, "bytesPerRCU", BYTES_PER_RCU))
-        bucket = TokenBucket(seg["rate"])
-        names = [f.name for f in self.schema_.fields]
-        for path in seg["files"]:
-            with open(path) as fh:
-                for line in fh:
-                    bucket.acquire(
-                        len(line) * self._rcu_factor / bytes_per_rcu
-                    )
-                    doc = json.loads(line)
-                    if self.pushed and not all(
-                        _matches_doc(f, doc) for f in self.pushed
-                    ):
-                        continue
-                    yield tuple(_coerce(doc.get(n), self.schema_[n].dataType) for n in names)
-
-
-def _coerce(v, dt):
-    if v is None:
-        return None
-    try:
-        if isinstance(dt, LongType):
-            return int(v)
-        if isinstance(dt, DoubleType):
-            return float(v)
-        if isinstance(dt, StringType):
-            return v if isinstance(v, str) else json.dumps(v)
-        if isinstance(dt, BooleanType):
-            return bool(v)
-        if isinstance(dt, ArrayType):
-            return [_coerce(x, dt.elementType) for x in v] if isinstance(v, list) else None
-        if isinstance(dt, MapType):
-            return (
-                {str(k): _coerce(x, dt.valueType) for k, x in v.items()}
-                if isinstance(v, dict)
-                else None
-            )
-    except (TypeError, ValueError):
-        return None
-    return v
-
 
 # ---------------------------------------------------------------------------
 # Writer (A10/A11/A12/A13)
@@ -841,8 +633,10 @@ class DynamoDataSource(DataSource):
         return "dynamo"
 
     def schema(self) -> StructType:
-        # User-supplied schema wins (A14 typed read → explicit schema);
-        # otherwise infer by sampling (A3).
+        # User-supplied schema wins (A14 typed read → explicit schema).
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         table = _opt(self.options, "tableName")
         if not table:
             raise ValueError("dynamo source requires option('tableName', ...)")
@@ -853,10 +647,13 @@ class DynamoDataSource(DataSource):
         segments = keyed_store.list_segments(store_dir, table, index_name)
         if not segments:
             raise ValueError(f"dynamo table '{table}' has no data segments")
-        if meta.get("format") == "jsonl":
-            schema = _infer_schema_jsonl(segments, meta["hash_key"], meta.get("range_key"))
-        else:
-            schema = _infer_schema_parquet(segments, meta["hash_key"], meta.get("range_key"))
+        # The schema the table was written with, keys non-nullable (A3);
+        # documents' schemas are inferred when they are ingested.
+        keys = {meta["hash_key"], meta.get("range_key")}
+        schema = StructType([
+            StructField(f.name, f.dataType, nullable=f.name not in keys)
+            for f in from_arrow_schema(pq.read_schema(segments[0])).fields
+        ])
         cols = _opt(self.options, "columns")
         if cols:  # projection pushdown via option (A6; Python DS has no prune hook)
             want = [c.strip() for c in cols.split(",")]

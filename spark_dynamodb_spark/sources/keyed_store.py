@@ -3,10 +3,9 @@
 Layout (FIXTURES.md "DynamoDB-shaped fixture"):
 
     <store_dir>/<table>/
-      _meta.json            # {hash_key, range_key?, rcu, wcu, gsis, format}
+      _meta.json            # {hash_key, range_key?, rcu, wcu, gsis, n_segments, set_columns}
       data/part-*.parquet   # N segment files, hash-partitioned on hash_key
       gsi/<name>/part-*.parquet   # materialized GSI, re-keyed
-      data/docs-*.jsonl     # (format="jsonl") schemaless document segments
 
 The reference's table semantics mapped here (SURVEY §1.1):
 - partition key → files are hash-partitioned by ``hash_key`` (Spark
@@ -20,8 +19,9 @@ The reference's table semantics mapped here (SURVEY §1.1):
   new base with the old index;
 - provisioned RCU/WCU → stored in _meta.json, consumed by the reader/
   writer token buckets;
-- schemalessness → optional jsonl format whose schema only exists by
-  sampling (exercises the reference's inference path, A3).
+- schemalessness → ``ingest_jsonl`` loads JSON-lines documents whose
+  schema only exists by sampling (the reference's inference path, A3)
+  and writes them through ``create_table`` like any other table.
 
 Store creation/maintenance runs as Spark jobs (repartition + write) —
 at 100 TB this is a normal shuffled write, not a driver loop.
@@ -35,6 +35,16 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 DEFAULT_STORE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -71,7 +81,7 @@ def list_segments(store_dir: str, table: str, index_name: str | None = None) -> 
     return sorted(
         os.path.join(d, f)
         for f in os.listdir(d)
-        if f.endswith(".parquet") or f.endswith(".jsonl")
+        if f.endswith(".parquet")
     )
 
 
@@ -140,9 +150,142 @@ def create_table(
         "rcu": rcu,
         "wcu": wcu,
         "gsis": gsis,
-        "format": "parquet",
         "n_segments": n_segments,
         "set_columns": set_columns or [],
     }
     write_meta(store_dir, table, meta)
     return meta
+
+
+# ---------------------------------------------------------------------------
+# JSON-lines ingest: schema inference by sampling (A3)
+# ---------------------------------------------------------------------------
+
+SAMPLE_ROWS = 1000  # ~1 page, mirrors the reference's 1 MB sample scan (A3)
+
+
+def _infer_json_type(v):
+    if isinstance(v, bool):
+        return BooleanType()
+    if isinstance(v, int):
+        return LongType()
+    if isinstance(v, float):
+        return DoubleType()
+    if isinstance(v, str):
+        return StringType()
+    if isinstance(v, list):
+        elem = None
+        for x in v:
+            t = _infer_json_type(x)
+            if t is not None:
+                elem = _merge_types(elem, t)
+        return ArrayType(elem or StringType())
+    if isinstance(v, dict):
+        vt = None
+        for x in v.values():
+            t = _infer_json_type(x)
+            if t is not None:
+                vt = _merge_types(vt, t)
+        return MapType(StringType(), vt or StringType())
+    return None  # null → unknown
+
+
+def _merge_types(a, b):
+    """Union two observed attribute types (absent/None yields the other).
+
+    Numeric widening long→double mirrors DynamoDB's single arbitrary-
+    precision N type being inferred as the widest observed (SURVEY §1.2).
+    Irreconcilable types degrade to string, like a JSON re-read would.
+    """
+    if a is None:
+        return b
+    if b is None or a == b:
+        return a
+    if {type(a), type(b)} == {LongType, DoubleType}:
+        return DoubleType()
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(_merge_types(a.elementType, b.elementType))
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(StringType(), _merge_types(a.valueType, b.valueType))
+    return StringType()
+
+
+def _infer_schema(docs: list[dict], keys: set[str]) -> StructType:
+    """The union of the attributes of the first SAMPLE_ROWS documents in
+    first-seen order; an attribute only ever null is a string, and the
+    ``keys`` are non-nullable."""
+    fields: dict[str, object] = {}
+    for doc in docs[:SAMPLE_ROWS]:
+        for k, v in doc.items():
+            fields[k] = _merge_types(fields.get(k), _infer_json_type(v))
+    return StructType(
+        [StructField(k, t or StringType(), nullable=k not in keys) for k, t in fields.items()]
+    )
+
+
+def _coerce(v, dt):
+    """One attribute converted to the inferred type (TypeConversion.scala,
+    A9): a value that does not convert becomes null."""
+    if v is None:
+        return None
+    try:
+        if isinstance(dt, LongType):
+            return int(v)
+        if isinstance(dt, DoubleType):
+            return float(v)
+        if isinstance(dt, StringType):
+            return v if isinstance(v, str) else json.dumps(v)
+        if isinstance(dt, BooleanType):
+            return bool(v)
+        if isinstance(dt, ArrayType):
+            return [_coerce(x, dt.elementType) for x in v] if isinstance(v, list) else None
+        if isinstance(dt, MapType):
+            return (
+                {str(k): _coerce(x, dt.valueType) for k, x in v.items()}
+                if isinstance(v, dict)
+                else None
+            )
+    except (TypeError, ValueError):
+        return None
+    return v
+
+
+def ingest_jsonl(
+    spark: SparkSession,
+    paths: list[str],
+    table: str,
+    hash_key: str,
+    range_key: str | None = None,
+    **create_table_options,
+) -> dict:
+    """Create (or replace) a keyed table from JSON-lines files, one
+    document per line, read once on the driver.
+
+    The schema is inferred from the first SAMPLE_ROWS documents (A3).
+    Every document is coerced to it: a missing attribute is null, and an
+    attribute no sampled document had is dropped. The table is then
+    written by ``create_table``, which takes the remaining options.
+    A document with no value for a key attribute raises ValueError.
+    """
+    docs, where = [], []
+    for path in paths:
+        with open(path) as f:
+            for n, line in enumerate(f, 1):
+                docs.append(json.loads(line))
+                where.append(f"{path}:{n}")
+    keys = [hash_key] + ([range_key] if range_key else [])
+    schema = _infer_schema(docs, set(keys))
+    rows = []
+    for doc, at in zip(docs, where):
+        item = {f.name: _coerce(doc.get(f.name), f.dataType) for f in schema.fields}
+        for k in keys:
+            if item.get(k) is None:
+                raise ValueError(
+                    f"ingest_jsonl: document {at} for table '{table}' has no value "
+                    f"for key '{k}'"
+                )
+        rows.append(tuple(item.values()))
+    return create_table(
+        spark, spark.createDataFrame(rows, schema), table, hash_key, range_key,
+        **create_table_options,
+    )

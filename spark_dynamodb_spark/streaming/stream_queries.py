@@ -132,6 +132,12 @@ def _microbatch_plan_confs(fn):
     ``spark.dynamo.stream.statePartitions`` to its key space (see
     state_partitions). Batch entries and stream-FINALIZE plans keep
     the session's settings either way.
+
+    It assumes one streaming query per session at a time: the two
+    knobs are session confs, set and restored around each batch, so a
+    second query running its batches concurrently on the same session
+    would plan under the first one's settings, or restore them under
+    its feet.
     """
     import functools
 

@@ -39,7 +39,7 @@ def _store(tmp_path, base: pa.Table, hash_key="pk", range_key=None, gsis=(), **m
     store = str(tmp_path)
     keyed_store.write_meta(store, "t", {
         "table": "t", "hash_key": hash_key, "range_key": range_key,
-        "rcu": 0.0, "wcu": 0.0, "gsis": list(gsis), "format": "parquet",
+        "rcu": 0.0, "wcu": 0.0, "gsis": list(gsis),
         "n_segments": 4, "set_columns": [], **meta,
     })
     for index in [None] + [g["name"] for g in gsis]:

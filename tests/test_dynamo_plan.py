@@ -11,7 +11,7 @@ from collections import Counter
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql.datasource import EqualTo, GreaterThan, In
+from pyspark.sql.datasource import EqualTo, GreaterThan, In, LessThanOrEqual, Not
 
 from spark_dynamodb_spark.sources import keyed_store
 from spark_dynamodb_spark.sources.dynamo import DynamoDataSource
@@ -29,10 +29,11 @@ def store(tmp_path) -> str:
     keyed_store.write_meta(store, "t", {
         "table": "t", "hash_key": "pk", "range_key": "sk", "rcu": 0.0, "wcu": 0.0,
         "gsis": [{"name": "by_kind", "hash_key": "kind", "range_key": "pk"}],
-        "format": "parquet", "n_segments": FILES, "set_columns": [],
+        "n_segments": FILES, "set_columns": [],
     })
     rows = [
-        {"pk": i // 2, "sk": i % 2, "kind": KINDS[i % len(KINDS)], "payload": f"p{i % 7}"}
+        {"pk": i // 2, "sk": i % 2, "kind": KINDS[i % len(KINDS)], "payload": f"p{i % 7}",
+         "score": i / 4}
         for i in range(ITEMS)
     ]
     split = {
@@ -116,3 +117,25 @@ def test_one_partition_gets_whole_capacity_budget(store):
 def test_unknown_index_names_table_index_and_indexes(store):
     with pytest.raises(ValueError, match=r"'t' has no index 'nope' \(indexes: by_kind\)"):
         _plan(store, [], indexName="nope")
+
+
+NAN = float("nan")
+RESIDUAL = {
+    "in_with_null": In(("pk",), (1, None)),
+    "not_in_with_null": Not(In(("pk",), (1, None))),
+    "equal_nan": EqualTo(("score",), NAN),
+    "greater_than_nan": GreaterThan(("score",), NAN),
+    "not_at_most_nan": Not(LessThanOrEqual(("score",), NAN)),
+}
+
+
+@pytest.mark.parametrize("name", RESIDUAL)
+def test_filter_arrow_would_answer_differently_stays_residual(store, name):
+    """Arrow's is_in matches null to null and Arrow compares NaN as IEEE
+    does, Spark does neither; a finite comparison on the double column
+    stays pushed."""
+    ds = DynamoDataSource({"tablename": "t", "storedir": store})
+    reader = ds.reader(ds.schema())
+    pushed = GreaterThan(("score",), 2.0)
+    assert list(reader.pushFilters([RESIDUAL[name], pushed])) == [RESIDUAL[name]]
+    assert reader.pushed == [pushed]

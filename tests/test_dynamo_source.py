@@ -127,33 +127,25 @@ def test_rate_limited_scan_slower(spark, sf_dir):
     assert slow > fast + 1.0
 
 
+def _ingest(spark, tmp_path, table: str, docs: list[dict]) -> None:
+    """Write ``docs`` as one JSON-lines file and ingest it as ``table``
+    (hash key ``pk``, one segment) in a store under ``tmp_path``."""
+    path = tmp_path / f"{table}.jsonl"
+    path.write_text("".join(json.dumps(d) + "\n" for d in docs))
+    keyed_store.ingest_jsonl(
+        spark, [str(path)], table, "pk", store_dir=str(tmp_path), n_segments=1
+    )
+
+
 def test_jsonl_schemaless_inference(spark, tmp_path):
     """Heterogeneous documents: schema = sampled union of attributes;
     missing attribute → null; numeric widening long→double (A3/§1.2)."""
-    tdir = tmp_path / "docs_kv" / "data"
-    tdir.mkdir(parents=True)
     docs = [
         {"pk": 1, "name": "a", "qty": 5},
         {"pk": 2, "name": "b", "price": 1.5, "tags": ["x", "y"]},
         {"pk": 3, "qty": 2.5, "meta": {"k": 1}},
     ]
-    with open(tdir / "seg-0.jsonl", "w") as f:
-        for d in docs:
-            f.write(json.dumps(d) + "\n")
-    keyed_store.write_meta(
-        str(tmp_path),
-        "docs_kv",
-        {
-            "table": "docs_kv",
-            "hash_key": "pk",
-            "range_key": None,
-            "rcu": 0,
-            "wcu": 0,
-            "gsis": [],
-            "format": "jsonl",
-            "n_segments": 1,
-        },
-    )
+    _ingest(spark, tmp_path, "docs_kv", docs)
     df = read_dynamo(spark, "docs_kv", storeDir=str(tmp_path))
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert schema["pk"] == "bigint"
@@ -291,35 +283,20 @@ def test_jsonl_not_filter_three_valued(spark, tmp_path):
     """NOT over a missing attribute must NOT match (SQL three-valued
     logic): pushed and unpushed plans agree on != and NOT(...) over
     schemaless docs (ADVICE r1 — pushed filters are not re-checked)."""
-    tdir = tmp_path / "tv_kv" / "data"
-    tdir.mkdir(parents=True)
     docs = [
         {"pk": 1, "qty": 5},
         {"pk": 2, "qty": 7},
         {"pk": 3},  # qty missing → NULL: excluded by qty != 5 AND NOT(qty > 6)
     ]
-    with open(tdir / "seg-0.jsonl", "w") as f:
-        for d in docs:
-            f.write(json.dumps(d) + "\n")
-    keyed_store.write_meta(
-        str(tmp_path),
-        "tv_kv",
-        {
-            "table": "tv_kv",
-            "hash_key": "pk",
-            "range_key": None,
-            "rcu": 0,
-            "wcu": 0,
-            "gsis": [],
-            "format": "jsonl",
-            "n_segments": 1,
-        },
-    )
+    _ingest(spark, tmp_path, "tv_kv", docs)
     for pred, want in [
         (F.col("qty") != 5, [2]),
         (~(F.col("qty") > 6), [1]),
         (F.col("qty").isNull(), [3]),
         (~F.col("qty").isNull() & (F.col("qty") != 7), [1]),
+        # x IN (5, NULL) is NULL, not TRUE, for every x but 5
+        (F.col("qty").isin(5, None), [1]),
+        (~F.col("qty").isin(5, None), []),
     ]:
         pushed = read_dynamo(spark, "tv_kv", storeDir=str(tmp_path)).filter(pred)
         unpushed = read_dynamo(
@@ -327,6 +304,46 @@ def test_jsonl_not_filter_three_valued(spark, tmp_path):
         ).filter(pred)
         assert sorted(r.pk for r in pushed.collect()) == want, str(pred)
         assert sorted(r.pk for r in unpushed.collect()) == want, str(pred)
+
+
+def test_ingest_jsonl_names_a_document_without_its_hash_key(spark, tmp_path):
+    """A document with no hash key is refused at ingest, by name, rather
+    than stored as a null key that every read would fail on in the JVM."""
+    with pytest.raises(
+        ValueError,
+        match=r"document \S+nokey_kv\.jsonl:2 for table 'nokey_kv' has no value for key 'pk'",
+    ):
+        _ingest(spark, tmp_path, "nokey_kv", [{"pk": 1, "qty": 5}, {"qty": 7}])
+    assert not (tmp_path / "nokey_kv").exists()
+
+
+def test_float_filters_pushed_vs_unpushed_agree(spark, tmp_path):
+    """Spark orders NaN above every other double, makes NaN = NaN and
+    matches -0.0 to 0.0 in IN; Arrow compares as IEEE does and answers
+    false, not null, for a null IN a list. Each comparison and its NOT,
+    with a finite and with a NaN literal, keeps the same rows pushed or
+    not."""
+    nan, inf = float("nan"), float("inf")
+    values = [1.0, nan, 5.0, None, inf, -inf, 2.0, -0.0]
+    keyed_store.create_table(
+        spark, spark.createDataFrame(list(enumerate(values, 1)), "pk long, d double"),
+        "t_nan", hash_key="pk", store_dir=str(tmp_path), n_segments=1,
+    )
+    d = F.col("d")
+    preds = []
+    for lit in (2.0, nan):
+        for p in (d == lit, d > lit, d >= lit, d < lit, d <= lit, d.isin(lit, 0.0)):
+            preds += [p, ~p]
+    # One unpushed read evaluates every predicate; a filter keeps TRUE.
+    flags = (
+        read_dynamo(spark, "t_nan", storeDir=str(tmp_path), filterPushdown="false")
+        .select("pk", *[p.alias(f"p{i}") for i, p in enumerate(preds)])
+        .collect()
+    )
+    for i, pred in enumerate(preds):
+        want = sorted(r.pk for r in flags if r[f"p{i}"] is True)
+        pushed = read_dynamo(spark, "t_nan", storeDir=str(tmp_path)).filter(pred)
+        assert sorted(r.pk for r in pushed.collect()) == want, str(pred)
 
 
 def test_binary_key_pushdown_agreement(spark):
@@ -455,19 +472,6 @@ def test_every_writer_stores_timestamps_as_micros(spark):
     assert units() == {"us"}
     rows = {r.pk: r for r in read_dynamo(spark, name).collect()}
     assert rows[1].ts == t1 and rows[1].kind == "click" and rows[2].ts == t1
-
-
-def test_eval_doc_unhandled_filter_fails_closed():
-    """_eval_doc must raise on a pushed-filter type it does not
-    handle, never default to keep-the-row (pushed filters are not
-    re-evaluated by Spark)."""
-    import pytest as _pytest
-    from pyspark.sql.datasource import EqualNullSafe
-
-    from spark_dynamodb_spark.sources.dynamo import _eval_doc
-
-    with _pytest.raises(ValueError, match="unhandled pushed filter"):
-        _eval_doc(EqualNullSafe(("x",), 1), {"x": 1})
 
 
 def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):

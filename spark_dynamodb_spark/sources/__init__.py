@@ -33,11 +33,19 @@ def read_dynamo(spark: SparkSession, table: str, **options) -> DataFrame:
 
 
 def write_dynamo(df: DataFrame, table: str, **options) -> None:
-    from spark_dynamodb_spark.sources.dynamo import register
+    """Write ``df`` into ``table`` as one job and one commit: each
+    partition stages its rows in a mapInArrow task, and the staged
+    files are merged into the store here, in the calling process. A
+    failed job or commit removes everything the write staged."""
+    from spark_dynamodb_spark.sources.dynamo import DynamoWriter, StagedFile, register
 
     register(df.sparkSession)
     options.setdefault("storeDir", keyed_store.DEFAULT_STORE_DIR)
-    writer = df.write.format("dynamo").option("tableName", table).mode("append")
-    for k, v in options.items():
-        writer = writer.option(k, str(v))
-    writer.save()
+    opts = {k.lower(): str(v) for k, v in options.items()}
+    writer = DynamoWriter(df.schema, {**opts, "tablename": table}, overwrite=False)
+    try:
+        staged = df.mapInArrow(writer.stage_arrow, "path string, rows long").collect()
+        writer.commit([StagedFile(path=r.path, rows=r.rows) for r in staged])
+    except BaseException:
+        writer.abort([])
+        raise

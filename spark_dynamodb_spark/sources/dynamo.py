@@ -11,14 +11,22 @@ Capability parity map (reference file → here):
                                                       option("columns", ...)
 - TableConnector rate limiting (A8)                 → rate_limiter.TokenBucket
 - TypeConversion/JavaConverter (A9/A10)             → reads: Arrow RecordBatches;
-                                                      writes: Spark Rows → dicts →
+                                                      write_dynamo: Arrow batches
+                                                      (DynamoWriter.stage_arrow);
+                                                      df.write.format / the stream
+                                                      sink: Spark Rows → dicts →
                                                       Arrow (DynamoWriter.write)
 - DynamoBatchWriter (A11 put) / update (A12) /      → DynamoWriter modes
   delete (A13)
 
 Deliberate deviations from the reference:
 - A write is one commit: executors stage files, the driver merges them
-  with the store and rewrites it. A write that fails before commit()
+  with the store and rewrites it. ``write_dynamo`` stages in one
+  mapInArrow job and commits in the calling process;
+  ``df.write.format("dynamo")`` and the stream sink go through Spark's
+  DataSource write, which builds the writer and runs commit() in
+  separate planning and commit runners. Both drive the same
+  DynamoWriter. A write that fails before commit()
   changes nothing (the reference's BatchWriteItem is at-least-once
   with no rollback, SURVEY §3 entry point 2). The rewrite itself is
   not atomic: each directory (the base data, then every GSI) is
@@ -457,11 +465,20 @@ def _as_set(col: "pa.ChunkedArray"):
 class DynamoWriter(DataSourceWriter):
     """Batch writer with put/update/delete modes.
 
-    Executors stage Arrow/parquet batches (rate-limited on WCU in
-    writeBatchSize chunks, mirroring 25-item BatchWriteItem); commit()
-    merges the staged items into the keyed store on the driver and
-    rewrites it — see the module docstring for what a reader can see
-    while that rewrite runs, and for the production mapping.
+    Executors stage one parquet file per task under this write's own
+    ``.staged/<write-id>/`` directory (``_stage``: rate-limited on WCU
+    in writeBatchSize chunks, mirroring 25-item BatchWriteItem);
+    commit() refuses items without a key, merges the staged items into
+    the keyed store on the driver and rewrites it — see the module
+    docstring for what a reader can see while that rewrite runs, and
+    for the production mapping.
+
+    Two orchestrations drive it. ``write_dynamo`` builds it in the
+    calling process, stages through ``stage_arrow`` in one mapInArrow
+    job and calls commit() (abort() on failure) there.
+    ``df.write.format("dynamo")`` and the stream sink go through Spark,
+    which builds it in a planning runner, stages through ``write`` and
+    runs commit()/abort() in a commit runner.
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -486,7 +503,11 @@ class DynamoWriter(DataSourceWriter):
             if _bool_opt(options, "putIfAbsent", False)
             else "put"
         )
-        self.staging = os.path.join(self.store_dir, self.table, ".staged")
+        # One directory per write, so abort() removes everything this
+        # write staged and nothing another write staged.
+        self.staging = os.path.join(
+            self.store_dir, self.table, ".staged", uuid.uuid4().hex
+        )
         self.batch_size = int(_opt(options, "writeBatchSize", 25))
         provisioned = float(self.meta.get("wcu") or 0.0)
         if provisioned <= 0:
@@ -495,40 +516,60 @@ class DynamoWriter(DataSourceWriter):
             float(_opt(options, "targetCapacity", 1.0)), provisioned, 8
         ) if provisioned > 0 else 0.0
 
-    def write(self, iterator: Iterator) -> StagedFile:
+    def _stage(self, batches: Iterable["pa.RecordBatch"]) -> StagedFile:
+        """Stage one task's rows as one parquet file under this write's
+        staging directory. Each ``writeBatchSize`` slice is one
+        BatchWriteItem (A11): it consumes its WCU before the next."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        os.makedirs(self.staging, exist_ok=True)
         arrow_schema = to_arrow_schema(self.schema_)
         bytes_per_wcu = float(_opt(self.options, "bytesPerWCU", BYTES_PER_WCU))
         bucket = TokenBucket(self.rate)
-        names = [f.name for f in self.schema_.fields]
-        rows, n = [], 0
-        batches = []
-        for row in iterator:
-            rows.append({k: row[i] for i, k in enumerate(names)})
-            n += 1
-            if len(rows) >= self.batch_size:
-                # One BatchWriteItem of `writeBatchSize` items (A11):
-                # consume WCU for the batch, then flush.
-                batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-                bucket.acquire(max(batch.nbytes / bytes_per_wcu, len(rows)))
-                batches.append(batch)
-                rows = []
-        if rows:
-            batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
-            bucket.acquire(max(batch.nbytes / bytes_per_wcu, len(rows)))
-            batches.append(batch)
-        path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
+        chunks = []
+        for batch in batches:
+            for start in range(0, batch.num_rows, self.batch_size):
+                chunk = batch.slice(start, self.batch_size)
+                bucket.acquire(max(chunk.nbytes / bytes_per_wcu, chunk.num_rows))
+                chunks.append(chunk)
         table = (
-            pa.Table.from_batches(batches)
-            if batches
-            else pa.Table.from_pylist([], schema=arrow_schema)
+            pa.Table.from_batches(chunks).cast(arrow_schema)
+            if chunks
+            else arrow_schema.empty_table()
         )
+        os.makedirs(self.staging, exist_ok=True)
+        path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, path)
-        return StagedFile(path=path, rows=n)
+        return StagedFile(path=path, rows=table.num_rows)
+
+    def write(self, iterator: Iterator) -> StagedFile:
+        """Spark's row-at-a-time write task (``df.write.format``, the
+        stream sink; direct callers pass tuples): rows →
+        ``writeBatchSize`` Arrow batches → ``_stage``."""
+        import itertools
+
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(self.schema_)
+
+        def batches():
+            while rows := list(itertools.islice(iterator, self.batch_size)):
+                yield pa.RecordBatch.from_pylist(
+                    [dict(zip(arrow_schema.names, row)) for row in rows],
+                    schema=arrow_schema,
+                )
+
+        return self._stage(batches())
+
+    def stage_arrow(self, batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        """``write_dynamo``'s mapInArrow task: stage the partition's
+        batches and yield its one ``(path, rows)`` record."""
+        import pyarrow as pa
+
+        m = self._stage(batches)
+        yield pa.RecordBatch.from_pylist([{"path": m.path, "rows": m.rows}])
 
     # -- driver-side merge --
     def commit(self, messages: list[StagedFile]) -> None:
@@ -538,10 +579,16 @@ class DynamoWriter(DataSourceWriter):
         key_cols = [self.meta["hash_key"]] + (
             [self.meta["range_key"]] if self.meta.get("range_key") else []
         )
-        staged_paths = [m.path for m in messages if m]
         staged = pds.dataset(
-            staged_paths, format="parquet", schema=to_arrow_schema(self.schema_)
+            [m.path for m in messages if m], format="parquet", schema=to_arrow_schema(self.schema_)
         ).to_table()
+        for k in key_cols:
+            missing = staged[k].null_count if k in staged.column_names else staged.num_rows
+            if missing:
+                raise ValueError(
+                    f"dynamo table '{self.table}': {missing} staged item(s) "
+                    f"have no value for key '{k}'"
+                )
         for col in self.meta.get("set_columns", []):
             if col in staged.column_names:
                 i = staged.schema.get_field_index(col)
@@ -556,19 +603,25 @@ class DynamoWriter(DataSourceWriter):
             _opt(self.options, "versionColumn", "version"),
         )
         self._rewrite(merged, key_cols)
-        self._cleanup(staged_paths)
+        self._cleanup(messages)
 
     def abort(self, messages: list[StagedFile]) -> None:
-        self._cleanup([m.path for m in messages if m])
+        self._cleanup(messages)
 
-    def _cleanup(self, paths: list[str]) -> None:
+    def _cleanup(self, messages: list[StagedFile]) -> None:
+        """Remove this write's staging directory and the ones its
+        messages name (the stream sink's commit runner builds a fresh
+        writer, whose own directory its tasks never used), then
+        ``.staged`` itself once no write is using it."""
         import shutil
 
-        for p in paths:
-            if p and os.path.exists(p):
-                os.remove(p)
-        if os.path.isdir(self.staging) and not os.listdir(self.staging):
-            shutil.rmtree(self.staging, ignore_errors=True)
+        dirs = {self.staging} | {os.path.dirname(m.path) for m in messages if m}
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(self.staging))
+        except OSError:
+            pass  # another write is staging, or nothing was staged
 
     def _rewrite(self, merged: "pa.Table", key_cols: list[str]) -> None:
         """Replace the data directory, then each GSI directory, with the

@@ -240,3 +240,56 @@ def test_overwrite_replaces_the_table(store):
     _commit(store, PATCH, [(5, "only")], overwrite=True)
     t = _table(store)
     assert t.column_names == ["pk", "tag"] and t.to_pylist() == [{"pk": 5, "tag": "only"}]
+
+
+MODES = [{}, {"update": True}, {"delete": True}, {"putIfAbsent": True},
+         {"versionedUpdate": True}, {"transactPutIfAbsent": True}]
+
+
+@pytest.mark.parametrize("options", MODES)
+@pytest.mark.parametrize("null_key", ["h", "r"])
+def test_item_without_a_key_is_refused_before_anything_is_written(tmp_path, options, null_key):
+    base = pa.table({
+        "h": pa.array([1, 2], pa.int64()),
+        "r": pa.array([1, 1], pa.int64()),
+        "version": pa.array([1, 1], pa.int64()),
+    })
+    store = _store(tmp_path, base, hash_key="h", range_key="r")
+    fields = [("h", LongType()), ("r", LongType()), ("version", LongType())]
+    rows = [(3, 1, 1), (None, 1, 1), (None, None, 1)] if null_key == "h" else [(3, None, 1)]
+    before = _digest(store)
+    n = 2 if null_key == "h" else 1
+    with pytest.raises(
+        ValueError,
+        match=f"dynamo table 't': {n} staged item\\(s\\) have no value for key '{null_key}'",
+    ):
+        _commit(store, fields, rows, **options)
+    assert _digest(store) == before
+
+
+def test_staging_is_per_write_and_abort_removes_only_its_own(store):
+    schema = StructType([StructField("pk", LongType()), StructField("tag", StringType())])
+    opts = {"tablename": "t", "storedir": store}
+    first, second = DynamoWriter(schema, opts, False), DynamoWriter(schema, opts, False)
+    kept = second.write(iter([(5, "kept")]))
+    first.write(iter([(4, "dropped")]))
+    first.write(iter([(6, "dropped")]))
+    first.abort([])  # a failed job returns no messages
+    assert glob.glob(os.path.join(store, "t", ".staged", "*", "*")) == [kept.path]
+    second.commit([kept])
+    assert not os.path.exists(os.path.join(store, "t", ".staged"))
+    assert set(_items(store)) == {(1,), (2,), (3,), (5,)}
+
+
+def test_arrow_and_row_adapters_stage_the_same_file(tmp_path):
+    store = _store(tmp_path, pa.table({"pk": pa.array([], pa.int64()), "tag": pa.array([], pa.string())}))
+    schema = StructType([StructField("pk", LongType()), StructField("tag", StringType())])
+    writer = DynamoWriter(schema, {"tablename": "t", "storedir": store}, False)
+    rows = [(k, f"t{k}") for k in range(60)]
+    from_rows = writer.write(iter(rows))
+    batches = pa.table({"pk": [r[0] for r in rows], "tag": [r[1] for r in rows]}).to_batches(
+        max_chunksize=40
+    )
+    record = next(writer.stage_arrow(iter(batches))).to_pylist()
+    assert [r["rows"] for r in record] == [60] and from_rows.rows == 60
+    assert pq.read_table(record[0]["path"]).equals(pq.read_table(from_rows.path))

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_dynamodb_spark.sources import keyed_store, read_dynamo, write_dynamo
+from spark_dynamodb_spark.sources.dynamo import TransactionCanceledException
 from spark_dynamodb_spark.sources.rate_limiter import TokenBucket
 from spark_dynamodb_spark.tables import load_table
 
@@ -543,11 +544,10 @@ def test_transact_cancel_leaves_store_untouched(spark, sf_dir):
     dirty = base.limit(2).select(
         "r_regionkey", F.lit("GARBAGE").alias("r_name")
     )
-    with pytest.raises(Exception, match="TransactionCanceled|batch rejected"):
+    with pytest.raises(TransactionCanceledException):
         write_dynamo(dirty, name, transactPutIfAbsent=True)
     assert store_digest() == before, "cancelled transaction mutated the store"
-    staged = glob.glob(os.path.join(store_dir, ".staged", "*"))
-    assert staged == [], f"staged residue survived the cancel: {staged}"
+    assert not os.path.exists(os.path.join(store_dir, ".staged")), "staged residue survived the cancel"
 
 
 def test_versioned_update_is_idempotent_per_expectation(spark, sf_dir):
@@ -753,3 +753,116 @@ def test_consistent_read_doubles_rcu(spark, sf_dir):
     ).count()
     consistent = time.monotonic() - t0
     assert consistent > eventual + 1.0
+
+
+def _file_stats(root: str) -> dict:
+    """{path: (inode, size)} of every file under ``root``."""
+    stats = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            stats[os.path.join(d, f)] = (st.st_ino, st.st_size)
+    return stats
+
+
+def test_write_with_a_null_key_is_refused(spark):
+    """An item without its hash key would make every later read fail in
+    the JVM (the key column is non-nullable): the commit refuses it and
+    the table stays readable and unchanged."""
+    name = "t_null_key"
+    ddl = "pk long, v string"
+    keyed_store.create_table(
+        spark, spark.createDataFrame([(1, "a"), (2, "b")], ddl), name, hash_key="pk", n_segments=2
+    )
+    before = _file_stats(os.path.join(keyed_store.DEFAULT_STORE_DIR, name))
+    with pytest.raises(ValueError, match="1 staged item\\(s\\) have no value for key 'pk'"):
+        write_dynamo(spark.createDataFrame([(None, "x"), (3, "c")], ddl), name)
+    assert _file_stats(os.path.join(keyed_store.DEFAULT_STORE_DIR, name)) == before
+    assert sorted(read_dynamo(spark, name).collect()) == [(1, "a"), (2, "b")]
+
+
+def test_failed_write_job_leaves_the_store_and_no_staging(spark):
+    """One task of the write job fails after the others have staged:
+    nothing is committed and every staged file is removed."""
+    name = "t_failed_job"
+    ddl = "pk long, v string"
+    keyed_store.create_table(
+        spark, spark.createDataFrame([(k, f"v{k}") for k in range(4)], ddl), name,
+        hash_key="pk", n_segments=2,
+    )
+    tdir = os.path.join(keyed_store.DEFAULT_STORE_DIR, name)
+    before = _file_stats(tdir)
+    batch = spark.createDataFrame([(k, f"w{k}") for k in range(8)], ddl).repartition(4).withColumn(
+        "v", F.when(F.col("pk") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_dynamo(batch, name)
+    assert _file_stats(tdir) == before
+    assert not os.path.exists(os.path.join(tdir, ".staged"))
+
+
+# One batch per write mode; the twin tables start from BASE_ROWS.
+BASE_ROWS = [(k, "even" if k % 2 == 0 else "odd", 1, f"v{k}") for k in range(10)]
+BATCHES = {
+    "put": ("pk long, kind string, version long, val string",
+            [(2, "odd", 5, "P2"), (11, "even", 1, "P11")], {}),
+    "update": ("pk long, val string", [(3, "U3"), (4, None), (12, "U12")], {"update": True}),
+    "delete": ("pk long", [(1,), (6,), (42,)], {"delete": True}),
+    "putIfAbsent": ("pk long, kind string, version long, val string",
+                    [(5, "odd", 9, "clobber"), (13, "odd", 1, "new")], {"putIfAbsent": True}),
+    "versionedUpdate": ("pk long, version long, val string",
+                        [(7, 1, "V7"), (8, 0, "stale"), (14, 1, "absent")],
+                        {"versionedUpdate": True}),
+    "transactPutIfAbsent": ("pk long, kind string, version long, val string",
+                            [(20, "even", 1, "T20"), (21, "odd", 1, "T21")],
+                            {"transactPutIfAbsent": True}),
+}
+
+
+def _twins(spark, stem: str) -> tuple[str, str]:
+    base = spark.createDataFrame(BASE_ROWS, "pk long, kind string, version long, val string")
+    gsis = [{"name": "by_kind", "hash_key": "kind", "range_key": "pk"}]
+    names = (f"{stem}_caller", f"{stem}_spark")
+    for name in names:
+        keyed_store.create_table(spark, base, name, hash_key="pk", gsis=gsis, n_segments=2)
+    return names
+
+
+def _spark_write(df, table: str, **options) -> None:
+    """The Spark-driven batch path: planning runner, write tasks,
+    commit runner."""
+    w = df.write.format("dynamo").mode("append").options(
+        tableName=table, storeDir=keyed_store.DEFAULT_STORE_DIR
+    )
+    w.options(**{k: str(v) for k, v in options.items()}).save()
+
+
+@pytest.mark.parametrize("mode", list(BATCHES))
+def test_both_write_paths_give_the_same_table(spark, mode):
+    """write_dynamo (one mapInArrow job, commit in the caller) and
+    df.write.format("dynamo") (Spark's DataSource write) stage through
+    the same writer and commit the same table, base and GSI."""
+    ddl, rows, options = BATCHES[mode]
+    caller, via_spark = _twins(spark, f"t_twin_{mode.lower()}")
+    before = sorted(read_dynamo(spark, caller).collect())
+    df = spark.createDataFrame(rows, ddl)
+    write_dynamo(df, caller, **options)
+    _spark_write(df, via_spark, **options)
+    for index in ({}, {"indexName": "by_kind"}):
+        got = sorted(read_dynamo(spark, caller, **index).collect())
+        assert got == sorted(read_dynamo(spark, via_spark, **index).collect())
+        assert got != before
+
+
+def test_both_write_paths_refuse_a_conflicting_transaction(spark):
+    caller, via_spark = _twins(spark, "t_twin_txn_conflict")
+    dirs = [os.path.join(keyed_store.DEFAULT_STORE_DIR, t) for t in (caller, via_spark)]
+    before = [_file_stats(d) for d in dirs]
+    df = spark.createDataFrame([(30, "even", 1, "new"), (4, "even", 1, "clash")],
+                               "pk long, kind string, version long, val string")
+    with pytest.raises(TransactionCanceledException):
+        write_dynamo(df, caller, transactPutIfAbsent=True)
+    with pytest.raises(Exception, match="TransactionCanceledException"):
+        _spark_write(df, via_spark, transactPutIfAbsent=True)
+    assert [_file_stats(d) for d in dirs] == before
+    assert not any(os.path.exists(os.path.join(d, ".staged")) for d in dirs)

@@ -33,19 +33,15 @@ def read_dynamo(spark: SparkSession, table: str, **options) -> DataFrame:
 
 
 def write_dynamo(df: DataFrame, table: str, **options) -> None:
-    """Write ``df`` into ``table`` as one job and one commit: each
-    partition stages its rows in a mapInArrow task, and the staged
-    files are merged into the store here, in the calling process. A
-    failed job or commit removes everything the write staged."""
-    from spark_dynamodb_spark.sources.dynamo import DynamoWriter, StagedFile, register
+    """Write ``df`` into ``table`` as one job and one merge: ``df.toArrow()``
+    collects the batch here (bounded by ``spark.driver.maxResultSize``, as
+    the merge holds it here anyway), one WCU bucket paces it with the
+    whole budget, and it is merged into the store. A failed job or a
+    refused merge changes nothing."""
+    from spark_dynamodb_spark.sources.dynamo import DynamoWriter, register
 
     register(df.sparkSession)
     options.setdefault("storeDir", keyed_store.DEFAULT_STORE_DIR)
     opts = {k.lower(): str(v) for k, v in options.items()}
     writer = DynamoWriter(df.schema, {**opts, "tablename": table}, overwrite=False)
-    try:
-        staged = df.mapInArrow(writer.stage_arrow, "path string, rows long").collect()
-        writer.commit([StagedFile(path=r.path, rows=r.rows) for r in staged])
-    except BaseException:
-        writer.abort([])
-        raise
+    writer.commit_table(writer.pace(df.toArrow().to_batches()))

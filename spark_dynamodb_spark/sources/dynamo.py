@@ -11,8 +11,8 @@ Capability parity map (reference file → here):
                                                       option("columns", ...)
 - TableConnector rate limiting (A8)                 → rate_limiter.TokenBucket
 - TypeConversion/JavaConverter (A9/A10)             → reads: Arrow RecordBatches;
-                                                      write_dynamo: Arrow batches
-                                                      (DynamoWriter.stage_arrow);
+                                                      write_dynamo: one Arrow table
+                                                      (df.toArrow());
                                                       df.write.format / the stream
                                                       sink: Spark Rows → dicts →
                                                       Arrow (DynamoWriter.write)
@@ -20,13 +20,13 @@ Capability parity map (reference file → here):
   delete (A13)
 
 Deliberate deviations from the reference:
-- A write is one commit: executors stage files, the driver merges them
-  with the store and rewrites it. ``write_dynamo`` stages in one
-  mapInArrow job and commits in the calling process;
-  ``df.write.format("dynamo")`` and the stream sink go through Spark's
-  DataSource write, which builds the writer and runs commit() in
-  separate planning and commit runners. Both drive the same
-  DynamoWriter. A write that fails before commit()
+- A write is one commit: the driver merges the batch with the store
+  and rewrites it. ``write_dynamo`` collects the batch with one
+  ``df.toArrow()`` (bounded by ``spark.driver.maxResultSize``) and
+  calls commit_table(); ``df.write.format("dynamo")`` and the stream
+  sink go through Spark's DataSource write: tasks stage files, and
+  planning and commit runners build the writer and run commit(). Both
+  drive the same DynamoWriter. A write that fails before its merge
   changes nothing (the reference's BatchWriteItem is at-least-once
   with no rollback, SURVEY §3 entry point 2). The rewrite itself is
   not atomic: each directory (the base data, then every GSI) is
@@ -465,20 +465,19 @@ def _as_set(col: "pa.ChunkedArray"):
 class DynamoWriter(DataSourceWriter):
     """Batch writer with put/update/delete modes.
 
-    Executors stage one parquet file per task under this write's own
-    ``.staged/<write-id>/`` directory (``_stage``: rate-limited on WCU
-    in writeBatchSize chunks, mirroring 25-item BatchWriteItem);
-    commit() refuses items without a key, merges the staged items into
-    the keyed store on the driver and rewrites it — see the module
-    docstring for what a reader can see while that rewrite runs, and
-    for the production mapping.
+    ``pace`` spends a batch's WCU in writeBatchSize slices, mirroring
+    25-item BatchWriteItem calls; commit_table() refuses items without a
+    key, merges the batch into the keyed store on the driver and
+    rewrites it — see the module docstring for what a reader can see
+    while that rewrite runs, and for the production mapping.
 
     Two orchestrations drive it. ``write_dynamo`` builds it in the
-    calling process, stages through ``stage_arrow`` in one mapInArrow
-    job and calls commit() (abort() on failure) there.
-    ``df.write.format("dynamo")`` and the stream sink go through Spark,
-    which builds it in a planning runner, stages through ``write`` and
-    runs commit()/abort() in a commit runner.
+    calling process, paces the collected batch there with the whole
+    budget and calls commit_table(). ``df.write.format("dynamo")`` and
+    the stream sink go through Spark, which builds it in a planning
+    runner; each task paces its share and stages one parquet file under
+    this write's own ``.staged/<write-id>/`` (``write``), and a commit
+    runner reads them back in commit() or removes them in abort().
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -509,47 +508,42 @@ class DynamoWriter(DataSourceWriter):
             self.store_dir, self.table, ".staged", uuid.uuid4().hex
         )
         self.batch_size = int(_opt(options, "writeBatchSize", 25))
-        provisioned = float(self.meta.get("wcu") or 0.0)
-        if provisioned <= 0:
-            provisioned = float(_opt(options, "throughput", 0) or 0)
-        self.rate = partition_rate(
-            float(_opt(options, "targetCapacity", 1.0)), provisioned, 8
-        ) if provisioned > 0 else 0.0
+        self.provisioned = float(self.meta.get("wcu") or 0.0) or float(
+            _opt(options, "throughput", 0) or 0
+        )
 
-    def _stage(self, batches: Iterable["pa.RecordBatch"]) -> StagedFile:
-        """Stage one task's rows as one parquet file under this write's
-        staging directory. Each ``writeBatchSize`` slice is one
-        BatchWriteItem (A11): it consumes its WCU before the next."""
+    def pace(self, batches: Iterable["pa.RecordBatch"], tasks: int = 1) -> "pa.Table":
+        """The batches as one table of the write's schema. Each
+        ``writeBatchSize`` slice is one BatchWriteItem (A11): it consumes
+        its WCU from a bucket holding 1/``tasks`` of the budget (A8)
+        before the next."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(self.schema_)
         bytes_per_wcu = float(_opt(self.options, "bytesPerWCU", BYTES_PER_WCU))
-        bucket = TokenBucket(self.rate)
+        target = float(_opt(self.options, "targetCapacity", 1.0))
+        bucket = TokenBucket(partition_rate(target, self.provisioned, tasks))
         chunks = []
         for batch in batches:
             for start in range(0, batch.num_rows, self.batch_size):
                 chunk = batch.slice(start, self.batch_size)
                 bucket.acquire(max(chunk.nbytes / bytes_per_wcu, chunk.num_rows))
                 chunks.append(chunk)
-        table = (
-            pa.Table.from_batches(chunks).cast(arrow_schema)
-            if chunks
-            else arrow_schema.empty_table()
-        )
-        os.makedirs(self.staging, exist_ok=True)
-        path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, path)
-        return StagedFile(path=path, rows=table.num_rows)
+        if not chunks:
+            return arrow_schema.empty_table()
+        return pa.Table.from_batches(chunks).cast(arrow_schema)
 
     def write(self, iterator: Iterator) -> StagedFile:
         """Spark's row-at-a-time write task (``df.write.format``, the
         stream sink; direct callers pass tuples): rows →
-        ``writeBatchSize`` Arrow batches → ``_stage``."""
+        ``writeBatchSize`` Arrow batches, paced with a task's share of
+        the budget → one parquet file under this write's staging
+        directory."""
         import itertools
 
         import pyarrow as pa
+        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(self.schema_)
@@ -561,34 +555,35 @@ class DynamoWriter(DataSourceWriter):
                     schema=arrow_schema,
                 )
 
-        return self._stage(batches())
-
-    def stage_arrow(self, batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        """``write_dynamo``'s mapInArrow task: stage the partition's
-        batches and yield its one ``(path, rows)`` record."""
-        import pyarrow as pa
-
-        m = self._stage(batches)
-        yield pa.RecordBatch.from_pylist([{"path": m.path, "rows": m.rows}])
+        table = self.pace(batches(), tasks=8)
+        os.makedirs(self.staging, exist_ok=True)
+        path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
+        pq.write_table(table, path)
+        return StagedFile(path=path, rows=table.num_rows)
 
     # -- driver-side merge --
     def commit(self, messages: list[StagedFile]) -> None:
+        """Merge the files the write tasks staged, then remove them."""
         import pyarrow.dataset as pds
         from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.commit_table(pds.dataset(
+            [m.path for m in messages if m], format="parquet", schema=to_arrow_schema(self.schema_)
+        ).to_table())
+        self._cleanup(messages)
+
+    def commit_table(self, staged: "pa.Table") -> None:
+        """Merge ``staged`` (rows in write order) into the store and
+        rewrite it."""
+        import pyarrow.dataset as pds
 
         key_cols = [self.meta["hash_key"]] + (
             [self.meta["range_key"]] if self.meta.get("range_key") else []
         )
-        staged = pds.dataset(
-            [m.path for m in messages if m], format="parquet", schema=to_arrow_schema(self.schema_)
-        ).to_table()
-        for k in key_cols:
-            missing = staged[k].null_count if k in staged.column_names else staged.num_rows
-            if missing:
-                raise ValueError(
-                    f"dynamo table '{self.table}': {missing} staged item(s) "
-                    f"have no value for key '{k}'"
-                )
+        keyed_store.refuse_null_keys(self.table, {
+            k: staged[k].null_count if k in staged.column_names else staged.num_rows
+            for k in key_cols
+        })
         for col in self.meta.get("set_columns", []):
             if col in staged.column_names:
                 i = staged.schema.get_field_index(col)
@@ -603,7 +598,6 @@ class DynamoWriter(DataSourceWriter):
             _opt(self.options, "versionColumn", "version"),
         )
         self._rewrite(merged, key_cols)
-        self._cleanup(messages)
 
     def abort(self, messages: list[StagedFile]) -> None:
         self._cleanup(messages)
@@ -780,11 +774,8 @@ def register(spark, force: bool = False) -> None:
       PythonStreamingSourceRunner).
     """
     _ship_package(spark)
-    # Truly idempotent per session (round 15): every registration
-    # pickles the three modules BY VALUE and ships them over py4j, and
-    # the dynamo-heavy entries call read/write_dynamo ten-plus times a
-    # run — re-registering each call burned measurable driver time and
-    # spammed "replaced a previously registered data source" warnings.
+    # Once per session: each registration pickles the three modules by
+    # value and ships them over py4j, which costs driver time per call.
     if getattr(spark, "_dynamo_source_registered", False) and not force:
         return
     from pyspark import cloudpickle
@@ -831,13 +822,8 @@ class DynamoSimpleStreamReader(SimpleDataSourceStreamReader):
         # ship it from the driver-side prefetcher to executors
         import pyarrow.parquet as pq
 
-        names = [f.name for f in self.schema_.fields]
-        tbl = pq.read_table(path, columns=names)
-        out = []
-        for batch in tbl.to_batches():
-            cols = [batch.column(i).to_pylist() for i in range(batch.num_columns)]
-            out.extend(zip(*cols))
-        return out
+        tbl = pq.read_table(path, columns=[f.name for f in self.schema_.fields])
+        return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
     def read(self, start: dict):
         done = int(start.get("files_done", 0))
@@ -853,10 +839,7 @@ class DynamoSimpleStreamReader(SimpleDataSourceStreamReader):
         # replay path (recovery): re-read the exact segment span
         segs = self._segments()
         lo, hi = int(start.get("files_done", 0)), int(end.get("files_done", 0))
-        out = []
-        for p in segs[lo:hi]:
-            out.extend(self._rows_of(p))
-        return iter(out)
+        return iter([row for p in segs[lo:hi] for row in self._rows_of(p)])
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean up — segments are immutable

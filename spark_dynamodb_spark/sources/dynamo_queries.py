@@ -24,50 +24,34 @@ def _sf_tag(sf_dir: str) -> str:
     return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
 
 
-def _ensure_customer_kv(spark: SparkSession, sf_dir: str) -> str:
-    """customer table keyed by c_custkey (FIXTURES.md M2 fixture)."""
-    name = f"customer_kv_{_sf_tag(sf_dir)}"
+def _ensure(spark: SparkSession, sf_dir: str, source: str, **create_table_options) -> str:
+    """Fixture table ``source`` as keyed table ``<source>_kv_<sf tag>``,
+    created on first use."""
+    name = f"{source}_kv_{_sf_tag(sf_dir)}"
     if not os.path.exists(keyed_store.meta_path(keyed_store.DEFAULT_STORE_DIR, name)):
         keyed_store.create_table(
-            spark,
-            load_table(spark, sf_dir, "customer"),
-            name,
-            hash_key="c_custkey",
-            n_segments=8,
+            spark, load_table(spark, sf_dir, source), name, **create_table_options
         )
     return name
+
+
+def _ensure_customer_kv(spark: SparkSession, sf_dir: str) -> str:
+    """customer table keyed by c_custkey (FIXTURES.md M2 fixture)."""
+    return _ensure(spark, sf_dir, "customer", hash_key="c_custkey", n_segments=8)
 
 
 def _ensure_events_kv(spark: SparkSession, sf_dir: str) -> str:
     """events keyed by (user_id, ts) with a GSI on event_type."""
-    name = f"events_kv_{_sf_tag(sf_dir)}"
-    if not os.path.exists(keyed_store.meta_path(keyed_store.DEFAULT_STORE_DIR, name)):
-        keyed_store.create_table(
-            spark,
-            load_table(spark, sf_dir, "events"),
-            name,
-            hash_key="user_id",
-            range_key="ts",
-            gsis=[{"name": "by_type", "hash_key": "event_type", "range_key": "ts"}],
-            n_segments=8,
-        )
-    return name
+    gsi = {"name": "by_type", "hash_key": "event_type", "range_key": "ts"}
+    return _ensure(spark, sf_dir, "events", hash_key="user_id", range_key="ts",
+                   gsis=[gsi], n_segments=8)
 
 
 def _ensure_lineitem_kv(spark: SparkSession, sf_dir: str) -> str:
     """lineitem keyed by (l_orderkey, l_linenumber) — the fact-scale
     scan target (600k rows at sf0.1)."""
-    name = f"lineitem_kv_{_sf_tag(sf_dir)}"
-    if not os.path.exists(keyed_store.meta_path(keyed_store.DEFAULT_STORE_DIR, name)):
-        keyed_store.create_table(
-            spark,
-            load_table(spark, sf_dir, "lineitem"),
-            name,
-            hash_key="l_orderkey",
-            range_key="l_linenumber",
-            n_segments=16,
-        )
-    return name
+    return _ensure(spark, sf_dir, "lineitem", hash_key="l_orderkey",
+                   range_key="l_linenumber", n_segments=16)
 
 
 @query(

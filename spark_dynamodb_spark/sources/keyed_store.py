@@ -29,6 +29,8 @@ at 100 TB this is a normal shuffled write, not a driver loop.
 
 from __future__ import annotations
 
+import glob
+import itertools
 import json
 import os
 import shutil
@@ -85,6 +87,36 @@ def list_segments(store_dir: str, table: str, index_name: str | None = None) -> 
     )
 
 
+def refuse_null_keys(table: str, nulls: dict[str, int]) -> None:
+    """Raise ValueError for the first key column with nulls (``nulls``:
+    key column → count); every later read would fail on such an item."""
+    for key, n in nulls.items():
+        if n:
+            raise ValueError(
+                f"dynamo table '{table}': {n} staged item(s) have no value for key '{key}'"
+            )
+
+
+def _footer_nulls(out_dir: str, keys: list[str]) -> dict[str, int]:
+    """Per column of ``keys``, its nulls in the parquet files under
+    ``out_dir``, summed from the footers; a column chunk whose footer has
+    no statistics (Spark writes none for long strings and binaries) is
+    read."""
+    import pyarrow.parquet as pq
+
+    nulls = dict.fromkeys(keys, 0)
+    for path in glob.glob(os.path.join(out_dir, "*.parquet")):
+        md = pq.read_metadata(path)
+        for i, j in itertools.product(range(md.num_row_groups), range(md.num_columns)):
+            col = md.row_group(i).column(j)
+            if col.path_in_schema in nulls:
+                st = col.statistics
+                nulls[col.path_in_schema] += st.null_count if st and st.has_null_count else (
+                    pq.ParquetFile(path).read_row_group(i, [col.path_in_schema])[0].null_count
+                )
+    return nulls
+
+
 def _write_partitioned(
     df: DataFrame, key: str, range_key: str | None, out_dir: str, n_segments: int
 ) -> None:
@@ -122,12 +154,17 @@ def create_table(
     ``set_columns`` declares array columns with DynamoDB set semantics
     (SS/NS/BS, SURVEY §1.2): uniqueness is enforced on every write —
     the writer sorts+dedups them, like the reference's set conversion.
+
+    A row with no value for the hash or range key raises ValueError and
+    leaves any existing table as it was.
     """
     gsis = gsis or []
     tdir = os.path.join(store_dir, table)
     tmp = tdir + ".tmp-" + uuid.uuid4().hex[:8]
     try:
         _write_partitioned(df, hash_key, range_key, os.path.join(tmp, "data"), n_segments)
+        keys = [hash_key] + ([range_key] if range_key else [])
+        refuse_null_keys(table, _footer_nulls(os.path.join(tmp, "data"), keys))
         for gsi in gsis:
             _write_partitioned(
                 df,

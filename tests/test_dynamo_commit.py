@@ -1,7 +1,8 @@
 """Spark-free tests of the write commit: each test builds a keyed store
 by hand under ``tmp_path``, stages one batch through
-``DynamoWriter.write`` and merges it with ``DynamoWriter.commit`` in
-process — no session, so the whole file runs in about a second."""
+``DynamoWriter.write`` and merges it with ``DynamoWriter.commit`` (or
+paces Arrow batches and merges them with ``commit_table``) in process —
+no session, so the whole file runs in about a second."""
 
 from __future__ import annotations
 
@@ -281,15 +282,25 @@ def test_staging_is_per_write_and_abort_removes_only_its_own(store):
     assert set(_items(store)) == {(1,), (2,), (3,), (5,)}
 
 
-def test_arrow_and_row_adapters_stage_the_same_file(tmp_path):
-    store = _store(tmp_path, pa.table({"pk": pa.array([], pa.int64()), "tag": pa.array([], pa.string())}))
-    schema = StructType([StructField("pk", LongType()), StructField("tag", StringType())])
-    writer = DynamoWriter(schema, {"tablename": "t", "storedir": store}, False)
-    rows = [(k, f"t{k}") for k in range(60)]
-    from_rows = writer.write(iter(rows))
+def test_row_and_table_commits_leave_the_same_store(tmp_path):
+    """write(rows) + commit() (Spark's DataSource write) and pace() +
+    commit_table() of the same rows as Arrow batches (write_dynamo)
+    leave byte-identical base and GSI files."""
+    empty = pa.table({"pk": pa.array([], pa.int64()), "tag": pa.array([], pa.string())})
+    gsis = [{"name": "by_tag", "hash_key": "tag"}]
+    stores = [_store(tmp_path / side, empty, gsis=gsis) for side in ("rows", "table")]
+    rows = [(k % 45, f"t{k % 7}") for k in range(60)]  # repeated keys: the last row wins
+    _commit(stores[0], PATCH, rows)
+    schema = StructType([StructField(n, t) for n, t in PATCH])
+    writer = DynamoWriter(schema, {"tablename": "t", "storedir": stores[1]}, False)
     batches = pa.table({"pk": [r[0] for r in rows], "tag": [r[1] for r in rows]}).to_batches(
         max_chunksize=40
     )
-    record = next(writer.stage_arrow(iter(batches))).to_pylist()
-    assert [r["rows"] for r in record] == [60] and from_rows.rows == 60
-    assert pq.read_table(record[0]["path"]).equals(pq.read_table(from_rows.path))
+    writer.commit_table(writer.pace(batches))
+
+    def files(store):
+        paths = glob.glob(os.path.join(store, "t", "**", "*.parquet"), recursive=True)
+        return {os.path.relpath(p, store): open(p, "rb").read() for p in paths}
+
+    assert files(stores[0]) == files(stores[1])
+    assert len(files(stores[0])) > 2 and len(_items(stores[0])) == 45

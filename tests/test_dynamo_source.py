@@ -128,6 +128,27 @@ def test_rate_limited_scan_slower(spark, sf_dir):
     assert slow > fast + 1.0
 
 
+def test_rate_limited_write_slower(spark, tmp_path):
+    """throughput/bytesPerWCU throttle write_dynamo (A8), which paces the
+    whole batch through one bucket holding the write's whole budget."""
+    store, ddl = str(tmp_path), "pk long, v string"
+    rows = [(k, "x" * 80) for k in range(2)]
+    keyed_store.create_table(
+        spark, spark.createDataFrame(rows, ddl), "t_rate_write", hash_key="pk",
+        n_segments=1, store_dir=store,
+    )
+    df = spark.createDataFrame(rows, ddl)
+    t0 = time.monotonic()
+    write_dynamo(df, "t_rate_write", storeDir=store)
+    fast = time.monotonic() - t0
+    # ~190 Arrow bytes at bytesPerWCU=50 → ~3.8 units at 1/s with burst 1
+    # → ~2.8 s asleep.
+    t0 = time.monotonic()
+    write_dynamo(df, "t_rate_write", storeDir=store, throughput=1, bytesPerWCU=50)
+    slow = time.monotonic() - t0
+    assert slow > fast + 1.0
+
+
 def _ingest(spark, tmp_path, table: str, docs: list[dict]) -> None:
     """Write ``docs`` as one JSON-lines file and ingest it as ``table``
     (hash key ``pk``, one segment) in a store under ``tmp_path``."""
@@ -781,9 +802,30 @@ def test_write_with_a_null_key_is_refused(spark):
     assert sorted(read_dynamo(spark, name).collect()) == [(1, "a"), (2, "b")]
 
 
+@pytest.mark.parametrize("null_key", ["pk", "rk"])
+def test_create_table_refuses_a_null_key_and_keeps_the_old_table(spark, null_key):
+    """create_table counts key nulls in the footers of the files it just
+    wrote (Spark writes no count for a chunk holding a long string, which
+    is read instead) and refuses the table before replacing the old one."""
+    name, ddl = "t_create_null_key", "pk long, rk string, v string"
+    old = spark.createDataFrame([(1, "r", "a"), (2, "r", "b")], ddl)
+    keyed_store.create_table(spark, old, name, hash_key="pk", range_key="rk", n_segments=1)
+    tdir = os.path.join(keyed_store.DEFAULT_STORE_DIR, name)
+    before = _file_stats(tdir)
+    bad = [(3, "r" * 5000, "c"), (None, "r", "d") if null_key == "pk" else (4, None, "d")]
+    with pytest.raises(ValueError, match=f"1 staged item\\(s\\) have no value for key '{null_key}'"):
+        keyed_store.create_table(
+            spark, spark.createDataFrame(bad, ddl), name, hash_key="pk", range_key="rk",
+            n_segments=1,
+        )
+    assert _file_stats(tdir) == before
+    assert not [d for d in os.listdir(keyed_store.DEFAULT_STORE_DIR) if d.startswith(name + ".")]
+    assert sorted(r.v for r in read_dynamo(spark, name).collect()) == ["a", "b"]
+
+
 def test_failed_write_job_leaves_the_store_and_no_staging(spark):
-    """One task of the write job fails after the others have staged:
-    nothing is committed and every staged file is removed."""
+    """One task of the job that collects the batch fails: nothing is
+    merged, every store file is kept and nothing is left staged."""
     name = "t_failed_job"
     ddl = "pk long, v string"
     keyed_store.create_table(
@@ -805,7 +847,7 @@ def test_failed_write_job_leaves_the_store_and_no_staging(spark):
 BASE_ROWS = [(k, "even" if k % 2 == 0 else "odd", 1, f"v{k}") for k in range(10)]
 BATCHES = {
     "put": ("pk long, kind string, version long, val string",
-            [(2, "odd", 5, "P2"), (11, "even", 1, "P11")], {}),
+            [(2, "odd", 5, "P2"), (11, "even", 1, "P11"), (2, "even", 6, "P2b")], {}),
     "update": ("pk long, val string", [(3, "U3"), (4, None), (12, "U12")], {"update": True}),
     "delete": ("pk long", [(1,), (6,), (42,)], {"delete": True}),
     "putIfAbsent": ("pk long, kind string, version long, val string",
@@ -839,19 +881,22 @@ def _spark_write(df, table: str, **options) -> None:
 
 @pytest.mark.parametrize("mode", list(BATCHES))
 def test_both_write_paths_give_the_same_table(spark, mode):
-    """write_dynamo (one mapInArrow job, commit in the caller) and
-    df.write.format("dynamo") (Spark's DataSource write) stage through
-    the same writer and commit the same table, base and GSI."""
+    """write_dynamo (the batch collected with toArrow() and merged in the
+    caller) and df.write.format("dynamo") (Spark's DataSource write:
+    tasks stage files, a commit runner merges them) drive the same
+    writer and commit the same table, base and GSI."""
     ddl, rows, options = BATCHES[mode]
     caller, via_spark = _twins(spark, f"t_twin_{mode.lower()}")
     before = sorted(read_dynamo(spark, caller).collect())
-    df = spark.createDataFrame(rows, ddl)
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, len(rows)), ddl)
     write_dynamo(df, caller, **options)
     _spark_write(df, via_spark, **options)
     for index in ({}, {"indexName": "by_kind"}):
         got = sorted(read_dynamo(spark, caller, **index).collect())
         assert got == sorted(read_dynamo(spark, via_spark, **index).collect())
         assert got != before
+    if mode == "put":  # pk 2 repeats in two partitions (one per row): the later row wins
+        assert read_dynamo(spark, caller).where("pk = 2").collect() == [(2, "even", 6, "P2b")]
 
 
 def test_both_write_paths_refuse_a_conflicting_transaction(spark):

@@ -2,9 +2,10 @@
 
 # Pure-Python guardrails (~4 s, no Spark): registry/COVERAGE.md sync,
 # the 50-name lexical-window invariant and the in-process write commit
-# and read planning tests and the schema-inference tests
-# (tests/test_dynamo_commit.py, tests/test_dynamo_plan.py,
-# tests/test_dynamo_infer.py). Run before EVERY
+# and read planning tests, the schema-inference tests and the
+# zip-archive re-read tests (tests/test_dynamo_commit.py,
+# tests/test_dynamo_plan.py, tests/test_dynamo_infer.py,
+# tests/test_zip_reread.py). Run before EVERY
 # commit that touches registry.py, COVERAGE.md, or adds a query —
 # round 6's snapshot commit skipped these and shipped 2 red tests.
 # A test rename breaks this target loudly (pinned node id) — that is
@@ -12,7 +13,8 @@
 check-fast:
 	python -m pytest tests/test_coverage_sync.py tests/test_coverage_index.py \
 	  "tests/test_properties.py::test_driver_window_holds_exactly_50_unprefixed_names" \
-	  tests/test_dynamo_commit.py tests/test_dynamo_plan.py tests/test_dynamo_infer.py -q
+	  tests/test_dynamo_commit.py tests/test_dynamo_plan.py tests/test_dynamo_infer.py \
+	  tests/test_zip_reread.py -q
 
 test:
 	python -m pytest tests/ -x -q

@@ -8,7 +8,7 @@ xxhash64 instead (same plan shape, cheaper hash).
 Scale notes (100 TB):
 - exact dedup is one map-side-combinable groupBy on a 16-byte hash —
   the shuffle carries (hash, min_id, count), not documents.
-- MinHash: signatures are 32 aggregates over exploded shingles
+- MinHash: signatures are 48 aggregates over exploded shingles
   (shuffle key = doc_id, combinable); LSH banding turns the O(n²)
   pair search into groupBy(band_hash) buckets — only same-bucket
   pairs are candidates, and the exact-Jaccard verify runs on
@@ -66,8 +66,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SHINGLE_K = 3
-N_HASHES = 32
-N_BANDS = 8
+N_HASHES = 48
+N_BANDS = 16
 ROWS_PER_BAND = N_HASHES // N_BANDS
 JACCARD_T = 0.8
 
@@ -75,7 +75,7 @@ JACCARD_T = 0.8
 # key) bucket — boilerplate-heavy corpora produce them — goes
 # quadratic in the self-join. Buckets larger than this are DROPPED
 # from candidate generation: a true near-dup cluster of size m needs
-# only ONE of its 8 bands under the cap to surface every pair, and a
+# only ONE of its 16 bands under the cap to surface every pair, and a
 # bucket this large at J >= 0.8 is overwhelmingly a low-similarity
 # boilerplate collision, not a duplicate cluster. 512 is far above
 # any fixture cluster (<= 5 docs) yet bounds per-bucket join work to
@@ -186,14 +186,15 @@ SQL_EXACT_JACCARD_PAIRS = f"""
 @query(
     "c02_dedup_minhash_lsh",
     SQL_EXACT_JACCARD_PAIRS,
-    doc="""Oracle = exact Jaccard over all pairs. Valid because at the
-    fixture's duplicate level (J ≈ 0.98) LSH recall with 8 bands × 4
-    rows is 1 - (1 - J^4)^8 ≈ 1 - 2e-9 — candidate generation misses
-    nothing above the 0.8 threshold (miss probability < 1e-6 even at
-    J = 0.9).""",
+    doc="""Oracle = exact Jaccard over all pairs. Valid because LSH
+    with 16 bands × 3 rows misses a pair with probability (1 - J^3)^16:
+    about 1e-5 at the 0.8 threshold, 8e-10 at J = 0.9 and 2e-20 at the
+    fixture's duplicate level (J ≈ 0.98). The 8 × 4 banding it replaced
+    missed 1.5% of pairs at J = 0.8, and did miss pairs at J 0.81-0.87
+    on the benchmark's seeded corpora (tests/test_llm.py).""",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2: shingle → 32-way MinHash → 8×4 LSH banding → candidate
+    """C2: shingle → 48-way MinHash → 16×3 LSH banding → candidate
     pairs → exact-Jaccard verify ≥ 0.8.
 
     Pipeline is pure DataFrame ops: narrow array transforms for
@@ -240,7 +241,7 @@ def _minhash_mix_sql(i: int, h: str = "h") -> str:
 
 
 # the two projection stages of minhash_band_rows, formatted ONCE at
-# import: 32 signature mins and the 8 band structs. Spelled as SQL
+# import: 48 signature mins and the 16 band structs. Spelled as SQL
 # strings because the Column-by-Column build (32 × array_min(transform)
 # with Python lambdas) cost ~1.3 s of py4j round trips PER
 # CONSTRUCTION of the c02 plan — measured round 15, half the query's
@@ -266,7 +267,7 @@ _MINHASH_BANDS_SQL = (
 
 def minhash_band_rows(hashed: DataFrame) -> DataFrame:
     """(doc_id, band, key) LSH band rows from a (doc_id, harr)
-    hashed-shingle relation: 32 per-seed bit mixes folded to 8x4 band
+    hashed-shingle relation: 48 per-seed bit mixes folded to 16x3 band
     keys, all narrow (no shuffle). ONE spelling shared by the one-shot
     pipeline below and s26's incremental band-bucket state
     (streaming/stream_queries.py) — s26's contract is value-equality
@@ -286,10 +287,10 @@ def _minhash_verified_pairs(base: DataFrame, arr_col: str) -> DataFrame:
     exact-verified near-dup pairs (doc_a, doc_b, jaccard >= 0.8),
     ordered.
 
-    32 minhash values per doc are computed NARROWLY from the per-doc
+    48 minhash values per doc are computed NARROWLY from the per-doc
     array (no explode, NO shuffle): each item is hashed ONCE
-    (xxhash64), then the 32 "permutations" are per-seed bit mixes
-    (_minhash_mix) — turning 32 hashes per item into 1 hash + 32
+    (xxhash64), then the 48 "permutations" are per-seed bit mixes
+    (_minhash_mix) — turning 48 hashes per item into 1 hash + 48
     codegen'd bit mixes. Signatures never reach the output (only
     exact-verified pairs do), so the fast JVM-intrinsic hash is fine
     here — no md5 portability constraint.
@@ -2203,7 +2204,7 @@ def unified_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle recomposes the registered c01/c02/c83 semantics as CTEs, so
     this row cannot drift from the methods it unifies. Near-dup uses
     the exact-Jaccard pair oracle — valid for the same recall reason
-    as c02 (8x4 banding at fixture dup levels misses nothing above
+    as c02 (16x3 banding at fixture dup levels misses nothing above
     0.8).
     """
     path = _c99_sig_path(sf_dir)

@@ -2402,10 +2402,10 @@ def train_shards_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-recall assumption (ADVICE r13, inherited verbatim from
     c02_dedup_minhash_lsh): stage 4's Spark side generates candidates
-    by 8x4 MinHash-LSH banding with the MAX_BUCKET_DOCS hot-bucket
+    by 16x3 MinHash-LSH banding with the MAX_BUCKET_DOCS hot-bucket
     cap, while the oracle enumerates exact all-pairs Jaccard. Equality
     holds because at the fixture's duplicate level (J >= 0.8 pairs sit
-    at J ~ 0.98) band recall is 1-(1-J^4)^8 ~ 1-2e-9 and no true-pair
+    at J ~ 0.98) band recall is 1-(1-J^3)^16 ~ 1-2e-20 and no true-pair
     bucket approaches the 512-doc cap; on adversarial data a missed
     candidate or capped bucket would diverge stage 4 AND shift every
     downstream pack boundary. The cap is the documented 100 TB

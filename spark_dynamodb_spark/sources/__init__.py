@@ -17,6 +17,11 @@ from spark_dynamodb_spark.sources import keyed_store
 
 
 def read_dynamo(spark: SparkSession, table: str, **options) -> DataFrame:
+    """``table`` as a DataFrame over the "dynamo" source. Use one
+    ``read_dynamo`` per query: Spark keeps a relation's last pushdown
+    (the reader and the files it planned) and reuses it for a later
+    query on that relation that pushes no filter, so a reused DataFrame
+    can answer with another query's filter or with replaced files."""
     from spark_dynamodb_spark.sources.dynamo import register
 
     register(spark)

@@ -271,6 +271,7 @@ class DynamoReader(DataSourceReader):
     def read(self, partition: InputPartition) -> Iterator["pa.RecordBatch"]:
         import pyarrow.dataset as pds
 
+        _reread_zips_on_change()
         seg = partition.value
 
         if not seg["files"]:
@@ -471,13 +472,14 @@ class DynamoWriter(DataSourceWriter):
     rewrites it — see the module docstring for what a reader can see
     while that rewrite runs, and for the production mapping.
 
-    Two orchestrations drive it. ``write_dynamo`` builds it in the
-    calling process, paces the collected batch there with the whole
-    budget and calls commit_table(). ``df.write.format("dynamo")`` and
-    the stream sink go through Spark, which builds it in a planning
-    runner; each task paces its share and stages one parquet file under
-    this write's own ``.staged/<write-id>/`` (``write``), and a commit
-    runner reads them back in commit() or removes them in abort().
+    Two orchestrations drive it; both pace the whole batch with the
+    whole budget. ``write_dynamo`` builds it in the calling process,
+    paces the collected batch there and calls commit_table().
+    ``df.write.format("dynamo")`` and the stream sink go through Spark,
+    which builds it in a planning runner; each task stages one parquet
+    file under this write's own ``.staged/<write-id>/`` (``write``), and
+    a commit runner reads them back and paces them in commit() or
+    removes them in abort().
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -512,10 +514,10 @@ class DynamoWriter(DataSourceWriter):
             _opt(options, "throughput", 0) or 0
         )
 
-    def pace(self, batches: Iterable["pa.RecordBatch"], tasks: int = 1) -> "pa.Table":
+    def pace(self, batches: Iterable["pa.RecordBatch"]) -> "pa.Table":
         """The batches as one table of the write's schema. Each
         ``writeBatchSize`` slice is one BatchWriteItem (A11): it consumes
-        its WCU from a bucket holding 1/``tasks`` of the budget (A8)
+        its WCU from one bucket holding the write's whole budget (A8)
         before the next."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -523,7 +525,7 @@ class DynamoWriter(DataSourceWriter):
         arrow_schema = to_arrow_schema(self.schema_)
         bytes_per_wcu = float(_opt(self.options, "bytesPerWCU", BYTES_PER_WCU))
         target = float(_opt(self.options, "targetCapacity", 1.0))
-        bucket = TokenBucket(partition_rate(target, self.provisioned, tasks))
+        bucket = TokenBucket(partition_rate(target, self.provisioned, 1))
         chunks = []
         for batch in batches:
             for start in range(0, batch.num_rows, self.batch_size):
@@ -537,25 +539,23 @@ class DynamoWriter(DataSourceWriter):
     def write(self, iterator: Iterator) -> StagedFile:
         """Spark's row-at-a-time write task (``df.write.format``, the
         stream sink; direct callers pass tuples): rows →
-        ``writeBatchSize`` Arrow batches, paced with a task's share of
-        the budget → one parquet file under this write's staging
-        directory."""
+        ``writeBatchSize`` Arrow batches → one parquet file under this
+        write's staging directory. commit() paces them."""
         import itertools
 
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        _reread_zips_on_change()
         arrow_schema = to_arrow_schema(self.schema_)
-
-        def batches():
-            while rows := list(itertools.islice(iterator, self.batch_size)):
-                yield pa.RecordBatch.from_pylist(
-                    [dict(zip(arrow_schema.names, row)) for row in rows],
-                    schema=arrow_schema,
-                )
-
-        table = self.pace(batches(), tasks=8)
+        batches = []
+        while rows := list(itertools.islice(iterator, self.batch_size)):
+            batches.append(pa.RecordBatch.from_pylist(
+                [dict(zip(arrow_schema.names, row)) for row in rows],
+                schema=arrow_schema,
+            ))
+        table = pa.Table.from_batches(batches, schema=arrow_schema)
         os.makedirs(self.staging, exist_ok=True)
         path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, path)
@@ -563,13 +563,15 @@ class DynamoWriter(DataSourceWriter):
 
     # -- driver-side merge --
     def commit(self, messages: list[StagedFile]) -> None:
-        """Merge the files the write tasks staged, then remove them."""
+        """Pace the files the write tasks staged with the whole budget,
+        merge them, then remove them."""
         import pyarrow.dataset as pds
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        self.commit_table(pds.dataset(
+        _reread_zips_on_change()
+        self.commit_table(self.pace(pds.dataset(
             [m.path for m in messages if m], format="parquet", schema=to_arrow_schema(self.schema_)
-        ).to_table())
+        ).to_batches()))
         self._cleanup(messages)
 
     def commit_table(self, staged: "pa.Table") -> None:
@@ -684,6 +686,7 @@ class DynamoDataSource(DataSource):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
+        _reread_zips_on_change()
         table = _opt(self.options, "tableName")
         if not table:
             raise ValueError("dynamo source requires option('tableName', ...)")
@@ -707,17 +710,55 @@ class DynamoDataSource(DataSource):
             schema = StructType([schema[c] for c in want])
         return schema
 
+    # Each method below (with schema(), DynamoReader.read and
+    # DynamoWriter.write/commit) is the connector's first call in one
+    # kind of Spark Python worker; see _reread_zips_on_change.
     def reader(self, schema: StructType) -> DynamoReader:
+        _reread_zips_on_change()
         return DynamoReader(schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> DynamoWriter:
+        _reread_zips_on_change()
         return DynamoWriter(schema, self.options, overwrite)
 
     def simpleStreamReader(self, schema: StructType) -> "DynamoSimpleStreamReader":
+        _reread_zips_on_change()
         return DynamoSimpleStreamReader(schema, self.options)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> "DynamoStreamWriter":
+        _reread_zips_on_change()
         return DynamoStreamWriter(schema, self.options, overwrite)
+
+
+def _reread_zips_on_change() -> None:
+    """Make ``zipimporter.invalidate_caches`` in this process re-read an
+    archive's directory only when the archive's (mtime, size) changed
+    since that importer last read it.
+
+    PySpark's workers call ``importlib.invalidate_caches()`` at the start
+    of every call, and CPython 3.11's zipimporter re-parses its whole
+    archive there: about 28,000 entries (pyspark.zip, the spark-core
+    jar, py4j, the shipped package), 64 ms of CPU per call. After this,
+    that reset costs one ``stat`` per zipimporter. Idempotent.
+    """
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "on_change", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            reread(self)
+            self._archive_stamp = stamp
+
+    invalidate_caches.on_change = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def _ship_package(spark) -> None:

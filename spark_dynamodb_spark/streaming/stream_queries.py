@@ -1798,8 +1798,8 @@ def _finalize_s26_oracle() -> None:
     a doc is a near-dup iff SOME smaller-id doc pairs with it at
     J >= 0.8, canon = the smallest such partner. Valid against the LSH
     incremental pipeline for the same reason c02's oracle is: at the
-    fixture's duplicate level (J ~ 0.98) the 8x4 banding misses
-    nothing above threshold (miss probability < 1e-6 at J = 0.9)."""
+    fixture's duplicate level (J ~ 0.98) the 16x3 banding misses
+    nothing above threshold (miss probability ~1e-9 at J = 0.9)."""
     from spark_dynamodb_spark.operators.dedup import SQL_EXACT_JACCARD_PAIRS
     from spark_dynamodb_spark.registry import REGISTRY
 
@@ -3610,7 +3610,7 @@ def _landing_zone_stream_run(
     #     ledger of all s1b md5s — proven by induction on batches,
     #     pinned by the s34==c121 equality pytest.
     #   * band state: band rows are a NARROW per-row derivation of
-    #     harr (minhash_band_rows — 32 bit-mixes + 8 band keys, no
+    #     harr (minhash_band_rows — 48 bit-mixes + 16 band keys, no
     #     shuffle), and every batch already re-reads the prior
     #     signature ledger for the Jaccard verify side, so deriving
     #     bands from the same read is strictly cheaper than landing

@@ -149,6 +149,36 @@ def test_rate_limited_write_slower(spark, tmp_path):
     assert slow > fast + 1.0
 
 
+def test_spark_write_paces_with_the_whole_budget(spark, tmp_path):
+    """df.write.format("dynamo") paces its staged batch in commit() with
+    the write's whole budget, as write_dynamo does, so a throttled
+    one-task write takes about as long on either path (a fixed eighth of
+    the budget per task made it about 8x slower)."""
+    store, ddl = str(tmp_path), "pk long, v string"
+    rows = [(k, "x" * 80) for k in range(2)]
+    keyed_store.create_table(
+        spark, spark.createDataFrame(rows, ddl), "t_rate_paths", hash_key="pk",
+        n_segments=1, store_dir=store,
+    )
+    df = spark.createDataFrame(rows, ddl).coalesce(1)
+    throttle = {"storeDir": store, "throughput": 1, "bytesPerWCU": 50}
+
+    def spark_write(**options):
+        w = df.write.format("dynamo").mode("append").option("tableName", "t_rate_paths")
+        w.options(**{k: str(v) for k, v in options.items()}).save()
+
+    write_dynamo(df, "t_rate_paths", storeDir=store)  # warm both paths
+    spark_write(storeDir=store)
+    t0 = time.monotonic()
+    write_dynamo(df, "t_rate_paths", **throttle)
+    caller = time.monotonic() - t0
+    t0 = time.monotonic()
+    spark_write(**throttle)
+    via_spark = time.monotonic() - t0
+    assert caller > 1.0  # the throttle bites
+    assert via_spark < 1.5 * caller
+
+
 def _ingest(spark, tmp_path, table: str, docs: list[dict]) -> None:
     """Write ``docs`` as one JSON-lines file and ingest it as ``table``
     (hash key ``pk``, one segment) in a store under ``tmp_path``."""

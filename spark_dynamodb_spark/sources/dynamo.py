@@ -10,12 +10,12 @@ Capability parity map (reference file → here):
 - DynamoScanBuilder/FilterPushdown.scala (A6/A7)    → DynamoReader.pushFilters +
                                                       option("columns", ...)
 - TableConnector rate limiting (A8)                 → rate_limiter.TokenBucket
-- TypeConversion/JavaConverter (A9/A10)             → reads: Arrow RecordBatches;
-                                                      write_dynamo: one Arrow table
-                                                      (df.toArrow());
+- TypeConversion/JavaConverter (A9/A10)             → Arrow both ways: reads yield
+                                                      RecordBatches; write_dynamo
+                                                      collects df.toArrow(), and
                                                       df.write.format / the stream
-                                                      sink: Spark Rows → dicts →
-                                                      Arrow (DynamoWriter.write)
+                                                      sink hand each task's Arrow
+                                                      batches to commit()
 - DynamoBatchWriter (A11 put) / update (A12) /      → DynamoWriter modes
   delete (A13)
 
@@ -24,9 +24,10 @@ Deliberate deviations from the reference:
   and rewrites it. ``write_dynamo`` collects the batch with one
   ``df.toArrow()`` (bounded by ``spark.driver.maxResultSize``) and
   calls commit_table(); ``df.write.format("dynamo")`` and the stream
-  sink go through Spark's DataSource write: tasks stage files, and
-  planning and commit runners build the writer and run commit(). Both
-  drive the same DynamoWriter. A write that fails before its merge
+  sink go through Spark's DataSource write: each task returns its Arrow
+  batches in its commit message, and a commit runner merges them in
+  commit(), so they too are bounded by ``spark.driver.maxResultSize``.
+  Both drive the same DynamoWriter. A write that fails before its merge
   changes nothing (the reference's BatchWriteItem is at-least-once
   with no rollback, SURVEY §3 entry point 2). The rewrite itself is
   not atomic: each directory (the base data, then every GSI) is
@@ -66,9 +67,9 @@ from typing import TYPE_CHECKING, Iterable, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
     SimpleDataSourceStreamReader,
     EqualTo,
     Filter,
@@ -306,9 +307,10 @@ class TransactionCanceledException(RuntimeError):
 
 
 @dataclass
-class StagedFile(WriterCommitMessage):
-    path: str
-    rows: int
+class ArrowBatches(WriterCommitMessage):
+    """One write task's rows, in the order Spark handed them over."""
+
+    table: "pa.Table"
 
 
 # -- the commit merge: one Arrow pipeline for every write mode --
@@ -463,7 +465,7 @@ def _as_set(col: "pa.ChunkedArray"):
     )
 
 
-class DynamoWriter(DataSourceWriter):
+class DynamoWriter(DataSourceArrowWriter):
     """Batch writer with put/update/delete modes.
 
     ``pace`` spends a batch's WCU in writeBatchSize slices, mirroring
@@ -473,13 +475,14 @@ class DynamoWriter(DataSourceWriter):
     while that rewrite runs, and for the production mapping.
 
     Two orchestrations drive it; both pace the whole batch with the
-    whole budget. ``write_dynamo`` builds it in the calling process,
-    paces the collected batch there and calls commit_table().
-    ``df.write.format("dynamo")`` and the stream sink go through Spark,
-    which builds it in a planning runner; each task stages one parquet
-    file under this write's own ``.staged/<write-id>/`` (``write``), and
-    a commit runner reads them back and paces them in commit() or
-    removes them in abort().
+    whole budget, and both hold it in one process, bounded by
+    ``spark.driver.maxResultSize``. ``write_dynamo`` builds it in the
+    calling process, paces the collected batch there and calls
+    commit_table(). ``df.write.format("dynamo")`` and the stream sink go
+    through Spark, which builds it in a planning runner; each task
+    returns its Arrow batches in its commit message (``write``), and a
+    commit runner paces and merges them in commit(). A failed job
+    leaves nothing to remove, so Spark's do-nothing abort() stands.
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -503,11 +506,6 @@ class DynamoWriter(DataSourceWriter):
             else "put_if_absent"
             if _bool_opt(options, "putIfAbsent", False)
             else "put"
-        )
-        # One directory per write, so abort() removes everything this
-        # write staged and nothing another write staged.
-        self.staging = os.path.join(
-            self.store_dir, self.table, ".staged", uuid.uuid4().hex
         )
         self.batch_size = int(_opt(options, "writeBatchSize", 25))
         self.provisioned = float(self.meta.get("wcu") or 0.0) or float(
@@ -536,43 +534,32 @@ class DynamoWriter(DataSourceWriter):
             return arrow_schema.empty_table()
         return pa.Table.from_batches(chunks).cast(arrow_schema)
 
-    def write(self, iterator: Iterator) -> StagedFile:
-        """Spark's row-at-a-time write task (``df.write.format``, the
-        stream sink; direct callers pass tuples): rows →
-        ``writeBatchSize`` Arrow batches → one parquet file under this
-        write's staging directory. commit() paces them."""
-        import itertools
-
+    def write(self, iterator: Iterator["pa.RecordBatch"]) -> ArrowBatches:
+        """Spark's write task (``df.write.format``, the stream sink):
+        return its Arrow batches, unchanged, for commit() to pace."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         _reread_zips_on_change()
         arrow_schema = to_arrow_schema(self.schema_)
-        batches = []
-        while rows := list(itertools.islice(iterator, self.batch_size)):
-            batches.append(pa.RecordBatch.from_pylist(
-                [dict(zip(arrow_schema.names, row)) for row in rows],
+        batches = list(iterator)
+        if batches and isinstance(batches[0], tuple):
+            # Tuples, one per row: perfbench's direct_write
+            # (perfbench/workloads.py) calls write() with them.
+            batches = [pa.RecordBatch.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(zip(*batches), arrow_schema)],
                 schema=arrow_schema,
-            ))
-        table = pa.Table.from_batches(batches, schema=arrow_schema)
-        os.makedirs(self.staging, exist_ok=True)
-        path = os.path.join(self.staging, f"stage-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, path)
-        return StagedFile(path=path, rows=table.num_rows)
+            )]
+        return ArrowBatches(
+            pa.Table.from_batches(batches) if batches else arrow_schema.empty_table()
+        )
 
     # -- driver-side merge --
-    def commit(self, messages: list[StagedFile]) -> None:
-        """Pace the files the write tasks staged with the whole budget,
-        merge them, then remove them."""
-        import pyarrow.dataset as pds
-        from pyspark.sql.pandas.types import to_arrow_schema
-
+    def commit(self, messages: list[ArrowBatches]) -> None:
+        """Pace the tasks' batches, in partition order, with the whole
+        budget and merge them."""
         _reread_zips_on_change()
-        self.commit_table(self.pace(pds.dataset(
-            [m.path for m in messages if m], format="parquet", schema=to_arrow_schema(self.schema_)
-        ).to_batches()))
-        self._cleanup(messages)
+        self.commit_table(self.pace(b for m in messages if m for b in m.table.to_batches()))
 
     def commit_table(self, staged: "pa.Table") -> None:
         """Merge ``staged`` (rows in write order) into the store and
@@ -600,24 +587,6 @@ class DynamoWriter(DataSourceWriter):
             _opt(self.options, "versionColumn", "version"),
         )
         self._rewrite(merged, key_cols)
-
-    def abort(self, messages: list[StagedFile]) -> None:
-        self._cleanup(messages)
-
-    def _cleanup(self, messages: list[StagedFile]) -> None:
-        """Remove this write's staging directory and the ones its
-        messages name (the stream sink's commit runner builds a fresh
-        writer, whose own directory its tasks never used), then
-        ``.staged`` itself once no write is using it."""
-        import shutil
-
-        dirs = {self.staging} | {os.path.dirname(m.path) for m in messages if m}
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        try:
-            os.rmdir(os.path.dirname(self.staging))
-        except OSError:
-            pass  # another write is staging, or nothing was staged
 
     def _rewrite(self, merged: "pa.Table", key_cols: list[str]) -> None:
         """Replace the data directory, then each GSI directory, with the
@@ -886,15 +855,17 @@ class DynamoSimpleStreamReader(SimpleDataSourceStreamReader):
         pass  # nothing to clean up — segments are immutable
 
 
-class DynamoStreamWriter(DataSourceStreamWriter):
+class DynamoStreamWriter(DataSourceStreamArrowWriter):
     """Streaming SINK (``writeStream.format("dynamo")``) — every
-    micro-batch runs the same staged-write + driver-merge commit as
-    the batch writer (put replaces whole items, ``update``/``delete``
-    options select the other merge modes). Idempotent under batch
-    retries for put/update: re-merging the same keyed items is a
-    no-op, which is the property a KV sink needs for effectively-once
-    output from an at-least-once engine. s05's foreachBatch upsert is
-    the user-space spelling; this is the first-class sink.
+    micro-batch runs the same commit as the batch writer: its tasks hand
+    their Arrow batches to the driver-side merge, bounded by
+    ``spark.driver.maxResultSize`` (put replaces whole items,
+    ``update``/``delete`` options select the other merge modes).
+    Idempotent under batch retries for put/update: re-merging the same
+    keyed items is a no-op, which is the property a KV sink needs for
+    effectively-once output from an at-least-once engine. s05's
+    foreachBatch upsert is the user-space spelling; this is the
+    first-class sink.
     """
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -905,11 +876,8 @@ class DynamoStreamWriter(DataSourceStreamWriter):
     def _delegate(self) -> DynamoWriter:
         return DynamoWriter(self.schema_, self.options, self.overwrite)
 
-    def write(self, iterator) -> "StagedFile":
+    def write(self, iterator) -> ArrowBatches:
         return self._delegate().write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
         self._delegate().commit(list(messages))
-
-    def abort(self, messages, batchId: int) -> None:
-        self._delegate().abort(list(messages))

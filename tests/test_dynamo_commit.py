@@ -1,5 +1,5 @@
 """Spark-free tests of the write commit: each test builds a keyed store
-by hand under ``tmp_path``, stages one batch through
+by hand under ``tmp_path``, passes one batch through
 ``DynamoWriter.write`` and merges it with ``DynamoWriter.commit`` (or
 paces Arrow batches and merges them with ``commit_table``) in process —
 no session, so the whole file runs in about a second."""
@@ -15,6 +15,7 @@ import pyarrow as pa
 import pyarrow.dataset as pds
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -51,11 +52,17 @@ def _store(tmp_path, base: pa.Table, hash_key="pk", range_key=None, gsis=(), **m
 
 
 def _commit(store, fields, rows, overwrite=False, **options) -> None:
+    """Write ``rows`` as one RecordBatch, the shape a Spark write task
+    hands ``DynamoWriter.write``, and commit it."""
     schema = StructType([StructField(n, t) for n, t in fields])
     opts = {"tablename": "t", "storedir": store}
     opts.update({k.lower(): str(v) for k, v in options.items()})
     writer = DynamoWriter(schema, opts, overwrite)
-    writer.commit([writer.write(iter(rows))])
+    names = [n for n, _ in fields]
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    writer.commit([writer.write(iter([batch]))])
 
 
 def _table(store, index=None) -> pa.Table:
@@ -268,30 +275,34 @@ def test_item_without_a_key_is_refused_before_anything_is_written(tmp_path, opti
     assert _digest(store) == before
 
 
-def test_staging_is_per_write_and_abort_removes_only_its_own(store):
+def test_write_without_commit_leaves_the_table_directory_untouched(store):
+    """A write task's batches travel in its commit message: write() alone
+    changes no file under the table's directory and creates none."""
+    def files() -> dict:
+        root = os.path.join(store, "t")
+        return {os.path.relpath(os.path.join(d, f), root): open(os.path.join(d, f), "rb").read()
+                for d, _dirs, fs in os.walk(root) for f in fs}
+
+    before = files()
     schema = StructType([StructField("pk", LongType()), StructField("tag", StringType())])
-    opts = {"tablename": "t", "storedir": store}
-    first, second = DynamoWriter(schema, opts, False), DynamoWriter(schema, opts, False)
-    kept = second.write(iter([(5, "kept")]))
-    first.write(iter([(4, "dropped")]))
-    first.write(iter([(6, "dropped")]))
-    first.abort([])  # a failed job returns no messages
-    assert glob.glob(os.path.join(store, "t", ".staged", "*", "*")) == [kept.path]
-    second.commit([kept])
-    assert not os.path.exists(os.path.join(store, "t", ".staged"))
-    assert set(_items(store)) == {(1,), (2,), (3,), (5,)}
+    writer = DynamoWriter(schema, {"tablename": "t", "storedir": store}, False)
+    batch = pa.record_batch({"pk": pa.array([4, 5], pa.int64()), "tag": ["a", "b"]})
+    msg = writer.write(iter([batch]))
+    assert files() == before
+    assert msg.table.num_rows == 2 and set(_items(store)) == {(1,), (2,), (3,)}
 
 
 def test_row_and_table_commits_leave_the_same_store(tmp_path):
-    """write(rows) + commit() (Spark's DataSource write) and pace() +
-    commit_table() of the same rows as Arrow batches (write_dynamo)
-    leave byte-identical base and GSI files."""
+    """write(tuples) + commit() (the shape perfbench's direct_write
+    passes) and pace() + commit_table() of the same rows as Arrow
+    batches (write_dynamo) leave byte-identical base and GSI files."""
     empty = pa.table({"pk": pa.array([], pa.int64()), "tag": pa.array([], pa.string())})
     gsis = [{"name": "by_tag", "hash_key": "tag"}]
     stores = [_store(tmp_path / side, empty, gsis=gsis) for side in ("rows", "table")]
     rows = [(k % 45, f"t{k % 7}") for k in range(60)]  # repeated keys: the last row wins
-    _commit(stores[0], PATCH, rows)
     schema = StructType([StructField(n, t) for n, t in PATCH])
+    writer = DynamoWriter(schema, {"tablename": "t", "storedir": stores[0]}, False)
+    writer.commit([writer.write(iter(rows))])
     writer = DynamoWriter(schema, {"tablename": "t", "storedir": stores[1]}, False)
     batches = pa.table({"pk": [r[0] for r in rows], "tag": [r[1] for r in rows]}).to_batches(
         max_chunksize=40

@@ -150,7 +150,7 @@ def test_rate_limited_write_slower(spark, tmp_path):
 
 
 def test_spark_write_paces_with_the_whole_budget(spark, tmp_path):
-    """df.write.format("dynamo") paces its staged batch in commit() with
+    """df.write.format("dynamo") paces its tasks' batches in commit() with
     the write's whole budget, as write_dynamo does, so a throttled
     one-task write takes about as long on either path (a fixed eighth of
     the budget per task made it about 8x slower)."""
@@ -524,6 +524,48 @@ def test_every_writer_stores_timestamps_as_micros(spark):
     assert units() == {"us"}
     rows = {r.pk: r for r in read_dynamo(spark, name).collect()}
     assert rows[1].ts == t1 and rows[1].kind == "click" and rows[2].ts == t1
+
+
+_TZ_PROBE = """
+import sys
+
+from spark_dynamodb_spark.session import get_spark
+from spark_dynamodb_spark.sources import keyed_store, read_dynamo, write_dynamo
+
+spark = get_spark("tz_probe", cpus=1)
+store = sys.argv[1]
+df = spark.sql("SELECT 1L AS pk, timestamp'2024-01-01 12:00:00' AS ts")
+for name in ("t_tz_caller", "t_tz_spark"):
+    keyed_store.create_table(spark, df, name, hash_key="pk", n_segments=1, store_dir=store)
+batch = spark.sql("SELECT 2L AS pk, timestamp'2024-01-01 12:00:00' AS ts")
+write_dynamo(batch, "t_tz_caller", storeDir=store)
+batch.write.format("dynamo").mode("append").options(tableName="t_tz_spark", storeDir=store).save()
+for name in ("t_tz_caller", "t_tz_spark"):
+    for r in read_dynamo(spark, name, storeDir=store).selectExpr("pk", "unix_micros(ts)").collect():
+        print(name, r[0], r[1])
+spark.stop()
+"""
+
+
+def test_both_write_paths_keep_a_timestamp_off_utc(tmp_path):
+    """With the process time zone off UTC and the session's at UTC,
+    write_dynamo and df.write.format("dynamo") store the same instant as
+    create_table (a Row → dict → Arrow round trip in the write tasks
+    stored it shifted by the local offset)."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TZ": "America/New_York", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _TZ_PROBE, str(tmp_path)], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    noon = 1704110400000000  # 2024-01-01 12:00:00 UTC, in microseconds
+    got = sorted(line.split() for line in out.stdout.splitlines() if line.startswith("t_tz_"))
+    assert got == [[name, pk, str(noon)] for name in ("t_tz_caller", "t_tz_spark")
+                   for pk in ("1", "2")]
 
 
 def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):
@@ -913,7 +955,7 @@ def _spark_write(df, table: str, **options) -> None:
 def test_both_write_paths_give_the_same_table(spark, mode):
     """write_dynamo (the batch collected with toArrow() and merged in the
     caller) and df.write.format("dynamo") (Spark's DataSource write:
-    tasks stage files, a commit runner merges them) drive the same
+    tasks return Arrow batches, a commit runner merges them) drive the same
     writer and commit the same table, base and GSI."""
     ddl, rows, options = BATCHES[mode]
     caller, via_spark = _twins(spark, f"t_twin_{mode.lower()}")

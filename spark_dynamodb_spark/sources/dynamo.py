@@ -444,15 +444,6 @@ def merge(
     return both.take(_pick(both, key_cols, how, "_row")["_row"])
 
 
-def _segment_ids(col: "pa.ChunkedArray", n_segments: int):
-    """The segment file of every value of a partition-key column:
-    pandas' hash of the column as pandas holds it, the placement every
-    commit has used, so a key stays in the file it is already in."""
-    import pandas as pd
-
-    return pd.util.hash_pandas_object(col.to_pandas(), index=False).to_numpy() % n_segments
-
-
 def _as_set(col: "pa.ChunkedArray"):
     """DynamoDB set types (SS/NS/BS) are unique on write (SURVEY §1.2):
     each list of a declared set column is deduped and sorted."""
@@ -566,9 +557,7 @@ class DynamoWriter(DataSourceArrowWriter):
         rewrite it."""
         import pyarrow.dataset as pds
 
-        key_cols = [self.meta["hash_key"]] + (
-            [self.meta["range_key"]] if self.meta.get("range_key") else []
-        )
+        key_cols = keyed_store.key_columns(self.meta)
         keyed_store.refuse_null_keys(self.table, {
             k: staged[k].null_count if k in staged.column_names else staged.num_rows
             for k in key_cols
@@ -586,56 +575,25 @@ class DynamoWriter(DataSourceArrowWriter):
             base, staged, key_cols, self.mode,
             _opt(self.options, "versionColumn", "version"),
         )
-        self._rewrite(merged, key_cols)
+        self._rewrite(merged)
 
-    def _rewrite(self, merged: "pa.Table", key_cols: list[str]) -> None:
+    def _rewrite(self, merged: "pa.Table") -> None:
         """Replace the data directory, then each GSI directory, with the
-        merged table. Each directory is swapped by rmtree + rename on
+        merged table, written by ``keyed_store.write_segments`` into a new
+        directory each. Each directory is swapped by rmtree + rename on
         its own, so the base and its GSIs are not replaced together."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         import shutil
 
         n_seg = int(self.meta.get("n_segments", 8))
-
-        def write_dir(out: str, part_key: str, sort_keys: list[str]) -> None:
+        for spec in [self.meta] + self.meta.get("gsis", []):  # the meta has no "name": data/
+            out = keyed_store.data_dir(self.store_dir, self.table, spec.get("name"))
             tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
-            os.makedirs(tmp, exist_ok=True)
-            if merged.num_rows == 0:
-                pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
-            else:
-                seg = _segment_ids(merged[part_key], n_seg)
-                order = merged.select(sort_keys).append_column("_seg", pa.array(seg))
-                rows = merged.take(pc.sort_indices(
-                    order, [("_seg", "ascending")] + [(k, "ascending") for k in sort_keys]
-                ))
-                start = 0
-                for i, n in enumerate(np.bincount(seg.astype(np.int64), minlength=n_seg)):
-                    if n:
-                        pq.write_table(
-                            rows.slice(start, n), os.path.join(tmp, f"part-{i:05d}.parquet")
-                        )
-                        start += n
+            keyed_store.write_segments(
+                tmp, merged, spec["hash_key"], keyed_store.key_columns(spec), n_seg
+            )
             if os.path.isdir(out):
                 shutil.rmtree(out)
             os.rename(tmp, out)
-
-        write_dir(
-            keyed_store.data_dir(self.store_dir, self.table),
-            self.meta["hash_key"],
-            key_cols,
-        )
-        for gsi in self.meta.get("gsis", []):
-            gsi_keys = [gsi["hash_key"]] + (
-                [gsi["range_key"]] if gsi.get("range_key") else []
-            )
-            write_dir(
-                keyed_store.data_dir(self.store_dir, self.table, gsi["name"]),
-                gsi["hash_key"],
-                gsi_keys,
-            )
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,11 @@ Layout (FIXTURES.md "DynamoDB-shaped fixture"):
       gsi/<name>/part-*.parquet   # materialized GSI, re-keyed
 
 The reference's table semantics mapped here (SURVEY §1.1):
-- partition key → files are hash-partitioned by ``hash_key`` (Spark
-  ``repartition(n, key)``), so a key lives in exactly one segment;
-- sort key → rows sorted by (hash_key, range_key) within segments
-  (``sortWithinPartitions``);
+- partition key → ``write_segments`` places every row by
+  ``segment_ids`` of ``hash_key``, so a key lives in exactly one
+  segment file, ``part-<seg>.parquet``, for the table's whole life:
+  ``create_table`` and every commit place it the same way;
+- sort key → rows sorted by (hash_key, range_key) within segments;
 - GSI → a *materialized* copy re-partitioned by the index keys, like
   DynamoDB's async-replicated index (``connector/TableIndexConnector``).
   Every write commit rewrites each GSI directory right after the base
@@ -23,18 +24,19 @@ The reference's table semantics mapped here (SURVEY §1.1):
   schema only exists by sampling (the reference's inference path, A3)
   and writes them through ``create_table`` like any other table.
 
-Store creation/maintenance runs as Spark jobs (repartition + write) —
-at 100 TB this is a normal shuffled write, not a driver loop.
+``create_table`` collects its input with ``df.toArrow()``, bounded by
+``spark.driver.maxResultSize`` as every write already is, and writes
+the segments in the calling process. A collect of ``make stress``'s 10x
+lineitem fixture has not been tried.
 """
 
 from __future__ import annotations
 
-import glob
-import itertools
 import json
 import os
 import shutil
 import uuid
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -47,6 +49,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 DEFAULT_STORE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -97,39 +102,46 @@ def refuse_null_keys(table: str, nulls: dict[str, int]) -> None:
             )
 
 
-def _footer_nulls(out_dir: str, keys: list[str]) -> dict[str, int]:
-    """Per column of ``keys``, its nulls in the parquet files under
-    ``out_dir``, summed from the footers; a column chunk whose footer has
-    no statistics (Spark writes none for long strings and binaries) is
-    read."""
+def key_columns(spec: dict) -> list[str]:
+    """The hash key and, if any, the range key of a table's meta or of
+    one of its GSI entries."""
+    return [spec["hash_key"]] + ([spec["range_key"]] if spec.get("range_key") else [])
+
+
+def segment_ids(col: "pa.ChunkedArray", n_segments: int):
+    """The segment of every value of a partition-key column: pandas'
+    hash of the column as pandas holds it."""
+    import pandas as pd
+
+    return pd.util.hash_pandas_object(col.to_pandas(), index=False).to_numpy() % n_segments
+
+
+def write_segments(
+    out: str, rows: "pa.Table", part_key: str, sort_keys: list[str], n_segments: int
+) -> None:
+    """Write ``rows`` into the new directory ``out``: one zstd
+    ``part-<seg>.parquet`` per non-empty segment of ``part_key``, its rows
+    sorted by ``sort_keys``. A table with no rows is one empty
+    ``part-00000.parquet`` that keeps the schema."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    nulls = dict.fromkeys(keys, 0)
-    for path in glob.glob(os.path.join(out_dir, "*.parquet")):
-        md = pq.read_metadata(path)
-        for i, j in itertools.product(range(md.num_row_groups), range(md.num_columns)):
-            col = md.row_group(i).column(j)
-            if col.path_in_schema in nulls:
-                st = col.statistics
-                nulls[col.path_in_schema] += st.null_count if st and st.has_null_count else (
-                    pq.ParquetFile(path).read_row_group(i, [col.path_in_schema])[0].null_count
-                )
-    return nulls
-
-
-def _write_partitioned(
-    df: DataFrame, key: str, range_key: str | None, out_dir: str, n_segments: int
-) -> None:
-    # INT96 (the default) reads back as Arrow timestamp[ns], which the
-    # Arrow batch path rejects — write explicit micros.
-    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    part = df.repartition(n_segments, key)
-    sort_cols = [key] + ([range_key] if range_key else [])
-    part.sortWithinPartitions(*sort_cols).write.mode("overwrite").parquet(out_dir)
-    # Drop Spark's _SUCCESS marker; segments are the parquet files only.
-    marker = os.path.join(out_dir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.remove(marker)
+    os.makedirs(out)
+    seg = segment_ids(rows[part_key], n_segments).astype(np.int64)
+    order = rows.select(sort_keys).append_column("_seg", pa.array(seg))
+    rows = rows.take(pc.sort_indices(
+        order, [("_seg", "ascending")] + [(k, "ascending") for k in sort_keys]
+    ))
+    counts = np.bincount(seg, minlength=n_segments)
+    starts = np.cumsum(counts) - counts
+    for i in np.flatnonzero(counts) if rows.num_rows else [0]:
+        pq.write_table(
+            rows.slice(starts[i], counts[i]),
+            os.path.join(out, f"part-{i:05d}.parquet"),
+            compression="zstd",
+        )
 
 
 def create_table(
@@ -155,41 +167,41 @@ def create_table(
     (SS/NS/BS, SURVEY §1.2): uniqueness is enforced on every write —
     the writer sorts+dedups them, like the reference's set conversion.
 
-    A row with no value for the hash or range key raises ValueError and
-    leaves any existing table as it was.
+    The rows are collected with ``df.toArrow()`` and written, as they
+    are (no merge, no dedup), by ``write_segments``: the placement every
+    commit keeps. A row with no value for the hash or range key raises
+    ValueError before any file is written, and any existing table stays
+    as it was.
     """
-    gsis = gsis or []
-    tdir = os.path.join(store_dir, table)
-    tmp = tdir + ".tmp-" + uuid.uuid4().hex[:8]
-    try:
-        _write_partitioned(df, hash_key, range_key, os.path.join(tmp, "data"), n_segments)
-        keys = [hash_key] + ([range_key] if range_key else [])
-        refuse_null_keys(table, _footer_nulls(os.path.join(tmp, "data"), keys))
-        for gsi in gsis:
-            _write_partitioned(
-                df,
-                gsi["hash_key"],
-                gsi.get("range_key"),
-                os.path.join(tmp, "gsi", gsi["name"]),
-                n_segments,
-            )
-        if os.path.isdir(tdir):
-            shutil.rmtree(tdir)
-        os.makedirs(os.path.dirname(tdir), exist_ok=True)
-        os.rename(tmp, tdir)
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     meta = {
         "table": table,
         "hash_key": hash_key,
         "range_key": range_key,
         "rcu": rcu,
         "wcu": wcu,
-        "gsis": gsis,
+        "gsis": gsis or [],
         "n_segments": n_segments,
         "set_columns": set_columns or [],
     }
+    rows = df.toArrow().cast(to_arrow_schema(df.schema))
+    refuse_null_keys(table, {k: rows[k].null_count for k in key_columns(meta)})
+    tdir = os.path.join(store_dir, table)
+    staged = table + ".tmp-" + uuid.uuid4().hex[:8]
+    tmp = os.path.join(store_dir, staged)
+    try:
+        for spec in [meta] + meta["gsis"]:  # the meta has no "name": data/
+            write_segments(
+                data_dir(store_dir, staged, spec.get("name")), rows, spec["hash_key"],
+                key_columns(spec), n_segments,
+            )
+        if os.path.isdir(tdir):
+            shutil.rmtree(tdir)
+        os.rename(tmp, tdir)
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
     write_meta(store_dir, table, meta)
     return meta
 

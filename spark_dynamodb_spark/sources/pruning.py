@@ -153,9 +153,7 @@ def with_pruned_scans(
         keep = [name for eid, name in pairs if eid in needed_ids]
         store_dir = options.get("storeDir", keyed_store.DEFAULT_STORE_DIR)
         meta = keyed_store.read_meta(str(store_dir), table)
-        key_cols = [meta["hash_key"]] + (
-            [meta["range_key"]] if meta.get("range_key") else []
-        )
+        key_cols = keyed_store.key_columns(meta)
         names = [name for _, name in pairs]
         keep_set = set(keep) | set(key_cols)
         ordered = [n for n in names if n in keep_set]  # schema order

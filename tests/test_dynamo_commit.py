@@ -315,3 +315,39 @@ def test_row_and_table_commits_leave_the_same_store(tmp_path):
 
     assert files(stores[0]) == files(stores[1])
     assert len(files(stores[0])) > 2 and len(_items(stores[0])) == 45
+
+
+def test_write_segments_places_each_key_in_its_segment_file_sorted_and_zstd(tmp_path):
+    rows = pa.table({
+        "pk": pa.array([k % 13 for k in range(60)], pa.int64()),
+        "rk": pa.array(range(60, 0, -1), pa.int64()),
+        "v": [f"v{k}" for k in range(60)],
+    })
+    out = str(tmp_path / "data")
+    keyed_store.write_segments(out, rows, "pk", ["pk", "rk"], 4)
+    seg = dict(zip(rows["pk"].to_pylist(), keyed_store.segment_ids(rows["pk"], 4)))
+    assert sorted(os.listdir(out)) == sorted({f"part-{s:05d}.parquet" for s in seg.values()})
+    got = []
+    for name in os.listdir(out):
+        path = os.path.join(out, name)
+        t = pq.read_table(path)
+        assert {f"part-{seg[k]:05d}.parquet" for k in t["pk"].to_pylist()} == {name}
+        keys = list(zip(t["pk"].to_pylist(), t["rk"].to_pylist()))
+        assert keys == sorted(keys)
+        md = pq.read_metadata(path)
+        assert {md.row_group(i).column(j).compression
+                for i in range(md.num_row_groups) for j in range(md.num_columns)} == {"ZSTD"}
+        got += t.to_pylist()
+    assert sorted(got, key=lambda r: r["v"]) == sorted(rows.to_pylist(), key=lambda r: r["v"])
+
+
+def test_write_segments_of_no_rows_writes_one_empty_file_with_the_schema(tmp_path):
+    empty = pa.table({
+        "pk": pa.array([], pa.int64()),
+        "tags": pa.array([], pa.list_(pa.string())),
+    })
+    out = str(tmp_path / "data")
+    keyed_store.write_segments(out, empty, "pk", ["pk"], 4)
+    assert os.listdir(out) == ["part-00000.parquet"]
+    t = pq.read_table(os.path.join(out, "part-00000.parquet"))
+    assert t.num_rows == 0 and t.schema.equals(empty.schema)

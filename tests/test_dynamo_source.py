@@ -526,6 +526,46 @@ def test_every_writer_stores_timestamps_as_micros(spark):
     assert rows[1].ts == t1 and rows[1].kind == "click" and rows[2].ts == t1
 
 
+def test_create_table_leaves_the_session_conf_as_it_found_it(spark):
+    key = "spark.sql.parquet.outputTimestampType"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    keyed_store.create_table(
+        spark, spark.sql("SELECT 1L AS pk, current_timestamp() AS ts"), "t_conf_untouched",
+        hash_key="pk", n_segments=1,
+    )
+    assert spark.conf.get(key) == before
+
+
+def test_a_one_item_put_leaves_every_other_item_in_its_file(spark):
+    """create_table and every commit place keys with one function: after
+    a one-item put, each other item of the base and of the GSI is in the
+    file of the same name as before."""
+    import pyarrow.parquet as pq
+
+    name = "t_stable_placement"
+    ddl = "pk long, kind string, v string"
+    rows = [(k, f"kind{k % 13}", f"v{k}") for k in range(2000)]
+    keyed_store.create_table(
+        spark, spark.createDataFrame(rows, ddl), name, hash_key="pk", n_segments=4,
+        gsis=[{"name": "by_kind", "hash_key": "kind"}],
+    )
+
+    def placement(index=None) -> dict:
+        return {
+            pk: os.path.basename(f)
+            for f in keyed_store.list_segments(keyed_store.DEFAULT_STORE_DIR, name, index)
+            for pk in pq.read_table(f, columns=["pk"])["pk"].to_pylist()
+        }
+
+    before = {index: placement(index) for index in (None, "by_kind")}
+    assert len(before[None]) == len(before["by_kind"]) == 2000
+    write_dynamo(spark.createDataFrame([(5000, "kind3", "new")], ddl), name)
+    for index, files in before.items():
+        after = placement(index)
+        assert after.pop(5000) and after == files
+
+
 _TZ_PROBE = """
 import sys
 
@@ -876,9 +916,9 @@ def test_write_with_a_null_key_is_refused(spark):
 
 @pytest.mark.parametrize("null_key", ["pk", "rk"])
 def test_create_table_refuses_a_null_key_and_keeps_the_old_table(spark, null_key):
-    """create_table counts key nulls in the footers of the files it just
-    wrote (Spark writes no count for a chunk holding a long string, which
-    is read instead) and refuses the table before replacing the old one."""
+    """create_table counts key nulls in the collected rows (one of them
+    beside a long string, which Spark's parquet footers gave no count
+    for) and refuses the table before writing any file."""
     name, ddl = "t_create_null_key", "pk long, rk string, v string"
     old = spark.createDataFrame([(1, "r", "a"), (2, "r", "b")], ddl)
     keyed_store.create_table(spark, old, name, hash_key="pk", range_key="rk", n_segments=1)

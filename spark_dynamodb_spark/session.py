@@ -9,6 +9,19 @@ real target (a many-executor cluster over ~100 TB):
   overridden per-job (or left to AQE's coalescing from a high initial).
 - Arrow enabled so Pandas-UDF paths are vectorized batch transfer.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- Python workers talk to the JVM over Unix domain sockets. Over
+  loopback TCP, a worker waited about 40 ms (a delayed-ACK stall) to
+  drain a 1-row task input; over a Unix socket it waits none. A Unix
+  socket skips Spark's token handshake: its file is created with the
+  process umask (mode 0755 under the usual 022), so only its owner can
+  connect. The socket dir is ``/tmp`` because a socket path is capped at
+  108 bytes, and the default (``java.io.tmpdir``) can be deeper than that.
+- Task workers are forked by ``spark_dynamodb_spark.daemon``, which
+  applies ``_reread_zips_on_change`` before it forks, so PythonRDD and UDF
+  workers that never run connector code stop re-reading every zip
+  archive at each call. ``spark.executorEnv.PYTHONPATH`` names the
+  package root, so the daemon imports the package from any working
+  directory.
 """
 
 from __future__ import annotations
@@ -18,6 +31,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "spark_dynamodb_spark", cpus: int | None = None) -> SparkSession:
@@ -35,6 +49,10 @@ def get_spark(app_name: str = "spark_dynamodb_spark", cpus: int | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "spark_dynamodb_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", "/tmp")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -667,6 +667,12 @@ def _reread_zips_on_change() -> None:
     archive there: about 28,000 entries (pyspark.zip, the spark-core
     jar, py4j, the shipped package), 64 ms of CPU per call. After this,
     that reset costs one ``stat`` per zipimporter. Idempotent.
+
+    In a ``session.get_spark`` session, ``spark_dynamodb_spark.daemon``
+    runs this before it forks any task worker. The calls in the connector
+    cover the rest: Spark forks the planner runners (schema, pushdown,
+    write, commit) from the stock ``pyspark.daemon``, and a session that
+    ``get_spark`` did not build has no daemon module of ours.
     """
     import zipimport
 

@@ -110,10 +110,21 @@ def key_columns(spec: dict) -> list[str]:
 
 def segment_ids(col: "pa.ChunkedArray", n_segments: int):
     """The segment of every value of a partition-key column: pandas'
-    hash of the column as pandas holds it."""
+    hash of the column's non-null values, held as their own type (an
+    int64 column with a null would reach pandas as float64 and hash
+    every value differently); a null is in segment 0."""
+    import numpy as np
     import pandas as pd
+    import pyarrow.compute as pc
 
-    return pd.util.hash_pandas_object(col.to_pandas(), index=False).to_numpy() % n_segments
+    def hashed(values):
+        return pd.util.hash_pandas_object(values.to_pandas(), index=False).to_numpy() % n_segments
+
+    if not col.null_count:
+        return hashed(col)
+    seg = np.zeros(len(col), dtype=np.uint64)
+    seg[pc.is_valid(col).to_numpy(zero_copy_only=False)] = hashed(col.drop_null())
+    return seg
 
 
 def write_segments(

@@ -341,6 +341,25 @@ def test_write_segments_places_each_key_in_its_segment_file_sorted_and_zstd(tmp_
     assert sorted(got, key=lambda r: r["v"]) == sorted(rows.to_pylist(), key=lambda r: r["v"])
 
 
+@pytest.mark.parametrize("values, typ", [
+    ([5, 6, 7, 2**60 + 1], pa.int64()),
+    ([True, False], pa.bool_()),
+    (["a", "b", "c"], pa.string()),
+])
+def test_segment_ids_place_a_value_the_same_beside_a_null(values, typ):
+    """A value's segment is its own: an int64 beside a null is not hashed
+    as the float64 pandas makes of that column. A column with no nulls
+    keeps pandas' hash of the column; every null is in segment 0."""
+    import pandas as pd
+
+    alone = pa.chunked_array([pa.array(values, typ)])
+    want = pd.util.hash_pandas_object(alone.to_pandas(), index=False).to_numpy() % 8
+    assert keyed_store.segment_ids(alone, 8).tolist() == want.tolist()
+    mixed = pa.chunked_array([pa.array([None] + values[:1], typ), pa.array(values[1:] + [None], typ)])
+    got = keyed_store.segment_ids(mixed, 8).tolist()
+    assert got == [0] + want.tolist() + [0]
+
+
 def test_write_segments_of_no_rows_writes_one_empty_file_with_the_schema(tmp_path):
     empty = pa.table({
         "pk": pa.array([], pa.int64()),

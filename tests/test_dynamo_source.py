@@ -608,6 +608,88 @@ def test_both_write_paths_keep_a_timestamp_off_utc(tmp_path):
                    for pk in ("1", "2")]
 
 
+def test_task_workers_skip_the_zip_reread_and_use_unix_sockets(spark):
+    """A PythonRDD task that runs no connector code is forked by
+    ``spark_dynamodb_spark.daemon``, so its zip archives are re-read only
+    when they change, and it talks to the JVM over a Unix domain socket."""
+
+    def probe(rows):
+        import os
+        import zipimport
+
+        list(rows)
+        yield (
+            getattr(zipimport.zipimporter.invalidate_caches, "on_change", False),
+            os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower(),
+        )
+
+    assert spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect() == [
+        (True, "true")
+    ]
+
+
+_FAR_PROBE = """
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+
+from spark_dynamodb_spark.session import get_spark
+from spark_dynamodb_spark.sources import keyed_store, read_dynamo, write_dynamo
+
+spark = get_spark("far_probe", cpus=1)
+store = sys.argv[2]
+plus = F.udf(lambda v: v + 1, "long")
+rows = spark.range(3).select(F.col("id").alias("pk"), plus("id").alias("v"))
+keyed_store.create_table(spark, rows, "t_far", hash_key="pk", n_segments=2, store_dir=store)
+write_dynamo(spark.range(3, 5).select(F.col("id").alias("pk"), plus("id").alias("v")),
+             "t_far", storeDir=store)
+for r in read_dynamo(spark, "t_far", storeDir=store).select("pk", plus("v")).collect():
+    print("row", r[0], r[1])
+spark.stop()
+"""
+
+
+def test_get_spark_runs_from_outside_the_repo_under_a_deep_tmpdir(tmp_path):
+    """From a working directory outside the repo, with java.io.tmpdir
+    deeper than a Unix socket path may be (108 bytes), a get_spark
+    session writes, reads and runs a Python UDF: its worker daemon
+    imports the package through spark.executorEnv.PYTHONPATH and its
+    sockets live in the short spark.python.unix.domain.socket.dir. Every
+    socket file a run makes is gone once it ends."""
+    import glob
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    deep = tmp_path / ("d" * 60) / ("t" * 60)
+    deep.mkdir(parents=True)
+    assert len(str(deep)) > 108
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        TMPDIR=str(deep),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYSPARK_SUBMIT_ARGS=(
+            f"--conf spark.driver.extraJavaOptions=-Djava.io.tmpdir={deep} pyspark-shell"
+        ),
+    )
+    def socks():
+        return set(glob.glob("/tmp/.*.sock"))
+
+    before = socks()
+    out = subprocess.run(
+        [sys.executable, "-c", _FAR_PROBE, repo, str(tmp_path / "store")], cwd=tmp_path,
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = sorted(line.split()[1:] for line in out.stdout.splitlines() if line.startswith("row "))
+    assert got == [[str(pk), str(pk + 2)] for pk in range(5)]
+    deadline = time.monotonic() + 10
+    while socks() - before and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not socks() - before
+
+
 def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):
     """s18: the dynamo streaming source must consume the table
     INCREMENTALLY (8 segments → several data micro-batches; the

@@ -12,10 +12,13 @@ real target (a many-executor cluster over ~100 TB):
 - Python workers talk to the JVM over Unix domain sockets. Over
   loopback TCP, a worker waited about 40 ms (a delayed-ACK stall) to
   drain a 1-row task input; over a Unix socket it waits none. A Unix
-  socket skips Spark's token handshake: its file is created with the
-  process umask (mode 0755 under the usual 022), so only its owner can
-  connect. The socket dir is ``/tmp`` because a socket path is capped at
-  108 bytes, and the default (``java.io.tmpdir``) can be deeper than that.
+  socket skips Spark's token handshake, and its file takes the process
+  umask (mode 0775 under umask 002), so the sockets go in
+  ``/tmp/spark-dynamodb-<uid>``, a directory of mode 0700 that only this
+  user can enter (``socket_dir``). It is that short because a socket path
+  is capped at 108 bytes, and the default (``java.io.tmpdir``) can be
+  deeper than that. A driver that exits without ``stop()`` leaves its
+  accumulator socket there.
 - Task workers are forked by ``spark_dynamodb_spark.daemon``, which
   applies ``_reread_zips_on_change`` before it forks, so PythonRDD and UDF
   workers that never run connector code stop re-reading every zip
@@ -27,11 +30,26 @@ real target (a many-executor cluster over ~100 TB):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def socket_dir() -> str:
+    """This user's directory for the session's Unix sockets, made mode 0700
+    if it is not there; a path there that is not such a directory is refused."""
+    path = f"/tmp/spark-dynamodb-{os.getuid()}"
+    try:
+        os.mkdir(path, 0o700)
+    except FileExistsError:
+        pass
+    st = os.lstat(path)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid() or st.st_mode & 0o077:
+        raise PermissionError(f"{path} must be a directory of this user's, mode 0700")
+    return path
 
 
 def get_spark(app_name: str = "spark_dynamodb_spark", cpus: int | None = None) -> SparkSession:
@@ -52,7 +70,7 @@ def get_spark(app_name: str = "spark_dynamodb_spark", cpus: int | None = None) -
         .config("spark.python.daemon.module", "spark_dynamodb_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.python.unix.domain.socket.enabled", "true")
-        .config("spark.python.unix.domain.socket.dir", "/tmp")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

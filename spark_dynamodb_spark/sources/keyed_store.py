@@ -117,13 +117,11 @@ def segment_ids(col: "pa.ChunkedArray", n_segments: int):
     import pandas as pd
     import pyarrow.compute as pc
 
-    def hashed(values):
-        return pd.util.hash_pandas_object(values.to_pandas(), index=False).to_numpy() % n_segments
-
-    if not col.null_count:
-        return hashed(col)
+    values = col.drop_null().to_pandas()
     seg = np.zeros(len(col), dtype=np.uint64)
-    seg[pc.is_valid(col).to_numpy(zero_copy_only=False)] = hashed(col.drop_null())
+    seg[pc.is_valid(col).to_numpy(zero_copy_only=False)] = (
+        pd.util.hash_pandas_object(values, index=False).to_numpy() % n_segments
+    )
     return seg
 
 

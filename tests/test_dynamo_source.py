@@ -629,6 +629,8 @@ def test_task_workers_skip_the_zip_reread_and_use_unix_sockets(spark):
 
 
 _FAR_PROBE = """
+import glob
+import os
 import sys
 
 sys.path.insert(0, sys.argv[1])
@@ -646,6 +648,32 @@ write_dynamo(spark.range(3, 5).select(F.col("id").alias("pk"), plus("id").alias(
              "t_far", storeDir=store)
 for r in read_dynamo(spark, "t_far", storeDir=store).select("pk", plus("v")).collect():
     print("row", r[0], r[1])
+
+# The Unix sockets this session holds: those bound by this process and its
+# descendants (the JVM and the worker daemons it forked).
+children = {}
+for stat in glob.glob("/proc/[0-9]*/stat"):
+    try:
+        ppid = int(open(stat).read().rsplit(")", 1)[1].split()[1])
+    except (OSError, IndexError):
+        continue
+    children.setdefault(ppid, []).append(int(stat.split("/")[2]))
+pids, inodes = [os.getpid()], set()
+while pids:
+    pid = pids.pop()
+    pids += children.get(pid, [])
+    for fd in glob.glob(f"/proc/{pid}/fd/*"):
+        try:
+            inodes.add(os.readlink(fd))
+        except OSError:
+            pass
+sock_dir = spark.conf.get("spark.python.unix.domain.socket.dir")
+print("dir", sock_dir)
+print("accumulator", spark.sparkContext._accumulatorServer.server_address)
+for line in list(open("/proc/net/unix"))[1:]:
+    f = line.split()
+    if len(f) > 7 and f"socket:[{f[6]}]" in inodes and f[7].startswith(sock_dir + "/"):
+        print("sock", f[7])
 spark.stop()
 """
 
@@ -655,9 +683,10 @@ def test_get_spark_runs_from_outside_the_repo_under_a_deep_tmpdir(tmp_path):
     deeper than a Unix socket path may be (108 bytes), a get_spark
     session writes, reads and runs a Python UDF: its worker daemon
     imports the package through spark.executorEnv.PYTHONPATH and its
-    sockets live in the short spark.python.unix.domain.socket.dir. Every
-    socket file a run makes is gone once it ends."""
-    import glob
+    sockets live in the short spark.python.unix.domain.socket.dir, a
+    directory only this user can enter even under umask 002. Every socket
+    file the session held is gone once it ends."""
+    import stat
     import subprocess
     import sys
 
@@ -673,21 +702,25 @@ def test_get_spark_runs_from_outside_the_repo_under_a_deep_tmpdir(tmp_path):
             f"--conf spark.driver.extraJavaOptions=-Djava.io.tmpdir={deep} pyspark-shell"
         ),
     )
-    def socks():
-        return set(glob.glob("/tmp/.*.sock"))
-
-    before = socks()
     out = subprocess.run(
         [sys.executable, "-c", _FAR_PROBE, repo, str(tmp_path / "store")], cwd=tmp_path,
-        env=env, capture_output=True, text=True, timeout=300,
+        env=env, capture_output=True, text=True, timeout=300, umask=0o002,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    got = sorted(line.split()[1:] for line in out.stdout.splitlines() if line.startswith("row "))
+    said = [line.split(" ", 1) for line in out.stdout.splitlines()]
+    got = sorted(rest.split() for word, rest in said if word == "row")
     assert got == [[str(pk), str(pk + 2)] for pk in range(5)]
+    (sock_dir,) = [rest for word, rest in said if word == "dir"]
+    (accumulator,) = [rest for word, rest in said if word == "accumulator"]
+    socks = {rest for word, rest in said if word == "sock"}
+    st = os.lstat(sock_dir)
+    assert len(sock_dir) < 40 and stat.S_ISDIR(st.st_mode) and stat.S_IMODE(st.st_mode) == 0o700
+    # the driver's accumulator server and at least one worker daemon
+    assert accumulator in socks and len(socks) >= 2
     deadline = time.monotonic() + 10
-    while socks() - before and time.monotonic() < deadline:
+    while any(map(os.path.exists, socks)) and time.monotonic() < deadline:
         time.sleep(0.1)
-    assert not socks() - before
+    assert not [s for s in socks if os.path.exists(s)]
 
 
 def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):

@@ -17,8 +17,8 @@ real target (a many-executor cluster over ~100 TB):
   ``/tmp/spark-dynamodb-<uid>``, a directory of mode 0700 that only this
   user can enter (``socket_dir``). It is that short because a socket path
   is capped at 108 bytes, and the default (``java.io.tmpdir``) can be
-  deeper than that. A driver that exits without ``stop()`` leaves its
-  accumulator socket there.
+  deeper than that. ``get_spark`` stops the context at exit, so a
+  driver that never calls ``stop()`` leaves no socket there either.
 - Task workers are forked by ``spark_dynamodb_spark.daemon``, which
   applies ``_reread_zips_on_change`` before it forks, so PythonRDD and UDF
   workers that never run connector code stop re-reading every zip
@@ -29,6 +29,7 @@ real target (a many-executor cluster over ~100 TB):
 
 from __future__ import annotations
 
+import atexit
 import os
 import stat
 
@@ -74,4 +75,8 @@ def get_spark(app_name: str = "spark_dynamodb_spark", cpus: int | None = None) -
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # SparkContext.stop, unlike SparkSession.stop, makes no JVM call once
+    # the context is stopped, so it is safe at exit after any shutdown.
+    atexit.unregister(spark.sparkContext.stop)  # once per session
+    atexit.register(spark.sparkContext.stop)
     return spark

@@ -29,13 +29,11 @@ Deliberate deviations from the reference:
   commit(), so they too are bounded by ``spark.driver.maxResultSize``.
   Both drive the same DynamoWriter. A write that fails before its merge
   changes nothing (the reference's BatchWriteItem is at-least-once
-  with no rollback, SURVEY §3 entry point 2). The rewrite itself is
-  not atomic: each directory (the base data, then every GSI) is
-  replaced on its own with rmtree + rename, so a concurrent reader can
-  see a new base with an old GSI, or miss files mid-swap, and two
-  concurrent writers can lose one of their updates.
-- GSIs are rewritten by the same commit, right after the base;
-  DynamoDB replicates them asynchronously.
+  with no rollback, SURVEY §3 entry point 2). ``keyed_store.publish``
+  replaces the base, every GSI and the meta by one rename (its module
+  docstring says what that does not yet guard).
+- GSIs are replaced by the same commit as the base; DynamoDB
+  replicates them asynchronously.
 
 Scale story: locally the "table" is a parquet segment directory;
 in production the same reader shape points each InputPartition at a
@@ -173,21 +171,6 @@ def _to_arrow_expr(f: Filter):
 # Reader (A4/A5/A6/A7/A8)
 # ---------------------------------------------------------------------------
 
-def _key_schema(meta: dict, table: str, index_name: str | None) -> dict:
-    """The read's key schema: the table's ``meta``, or the entry of GSI
-    ``index_name`` in it (A5)."""
-    if not index_name:
-        return meta
-    gsis = meta.get("gsis", [])
-    for gsi in gsis:
-        if gsi["name"] == index_name:
-            return gsi
-    names = ", ".join(g["name"] for g in gsis) or "none"
-    raise ValueError(
-        f"dynamo table '{table}' has no index '{index_name}' (indexes: {names})"
-    )
-
-
 def scan_segment(idx: int, total: int, files: list[str], rate: float) -> InputPartition:
     """One scan segment: Segment=idx, TotalSegments=total (A4).
     rate = capacity units/sec for this partition; 0 = unlimited."""
@@ -203,8 +186,6 @@ class DynamoReader(DataSourceReader):
             raise ValueError("dynamo source requires option('tableName', ...)")
         self.store_dir = _opt(options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
         self.index_name = _opt(options, "indexName")
-        self.meta = keyed_store.read_meta(self.store_dir, self.table)
-        self.hash_key = _key_schema(self.meta, self.table, self.index_name)["hash_key"]
         self.pushed: list[Filter] = []
         self.filter_pushdown = _bool_opt(options, "filterPushdown", True)
 
@@ -226,15 +207,16 @@ class DynamoReader(DataSourceReader):
         capacity budget, and a scan is sized from the table bytes. The
         one segment still reads every file, with the key filter pushed
         into each, until keys are routed to files (ROADMAP.md,
-        key-routed planning)."""
-        files = keyed_store.list_segments(self.store_dir, self.table, self.index_name)
+        key-routed planning). An unknown index raises here."""
+        meta, files = keyed_store.snapshot(self.store_dir, self.table, self.index_name)
         if not files:
             return [scan_segment(0, 1, [], 0.0)]
+        hash_key = keyed_store.key_spec(meta, self.index_name)["hash_key"]
         n_opt = _opt(options=self.options, key="readPartitions")
         if n_opt is not None:
             n = max(1, int(n_opt))
         elif any(
-            isinstance(f, (EqualTo, In)) and f.attribute == (self.hash_key,)
+            isinstance(f, (EqualTo, In)) and f.attribute == (hash_key,)
             for f in self.pushed
         ):
             n = 1
@@ -246,7 +228,7 @@ class DynamoReader(DataSourceReader):
             n = min(len(files), max(1, -(-total_bytes // target)))
             n = max(n, min(len(files), 8))
         n = min(n, len(files))
-        provisioned = float(self.meta.get("rcu") or 0.0)
+        provisioned = float(meta.get("rcu") or 0.0)
         if provisioned <= 0:  # on-demand → 'throughput' option, default 100
             provisioned = float(_opt(self.options, "throughput", 0) or 0)
         target_cap = float(_opt(self.options, "targetCapacity", 1.0))
@@ -462,8 +444,9 @@ class DynamoWriter(DataSourceArrowWriter):
     ``pace`` spends a batch's WCU in writeBatchSize slices, mirroring
     25-item BatchWriteItem calls; commit_table() refuses items without a
     key, merges the batch into the keyed store on the driver and
-    rewrites it — see the module docstring for what a reader can see
-    while that rewrite runs, and for the production mapping.
+    publishes the base, its GSIs and the meta together with
+    ``keyed_store.publish`` — see the module docstring for the
+    production mapping.
 
     Two orchestrations drive it; both pace the whole batch with the
     whole budget, and both hold it in one process, bounded by
@@ -484,7 +467,6 @@ class DynamoWriter(DataSourceArrowWriter):
         if not self.table:
             raise ValueError("dynamo sink requires option('tableName', ...)")
         self.store_dir = _opt(options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
-        self.meta = keyed_store.read_meta(self.store_dir, self.table)
         self.mode = (
             "delete"
             if _bool_opt(options, "delete", False)
@@ -499,9 +481,8 @@ class DynamoWriter(DataSourceArrowWriter):
             else "put"
         )
         self.batch_size = int(_opt(options, "writeBatchSize", 25))
-        self.provisioned = float(self.meta.get("wcu") or 0.0) or float(
-            _opt(options, "throughput", 0) or 0
-        )
+        wcu = keyed_store.read_meta(self.store_dir, self.table).get("wcu")
+        self.provisioned = float(wcu or 0.0) or float(_opt(options, "throughput", 0) or 0)
 
     def pace(self, batches: Iterable["pa.RecordBatch"]) -> "pa.Table":
         """The batches as one table of the write's schema. Each
@@ -554,46 +535,28 @@ class DynamoWriter(DataSourceArrowWriter):
 
     def commit_table(self, staged: "pa.Table") -> None:
         """Merge ``staged`` (rows in write order) into the store and
-        rewrite it."""
+        publish the result."""
         import pyarrow.dataset as pds
 
-        key_cols = keyed_store.key_columns(self.meta)
+        meta, base_files = keyed_store.snapshot(self.store_dir, self.table)
+        key_cols = keyed_store.key_columns(meta)
         keyed_store.refuse_null_keys(self.table, {
             k: staged[k].null_count if k in staged.column_names else staged.num_rows
             for k in key_cols
         })
-        for col in self.meta.get("set_columns", []):
+        for col in meta.get("set_columns", []):
             if col in staged.column_names:
                 i = staged.schema.get_field_index(col)
                 staged = staged.set_column(i, col, _as_set(staged[col]))
-        base_files = (
-            [] if self.overwrite
-            else keyed_store.list_segments(self.store_dir, self.table)
+        base = (
+            pds.dataset(base_files, format="parquet").to_table()
+            if base_files and not self.overwrite else None
         )
-        base = pds.dataset(base_files, format="parquet").to_table() if base_files else None
         merged = merge(
             base, staged, key_cols, self.mode,
             _opt(self.options, "versionColumn", "version"),
         )
-        self._rewrite(merged)
-
-    def _rewrite(self, merged: "pa.Table") -> None:
-        """Replace the data directory, then each GSI directory, with the
-        merged table, written by ``keyed_store.write_segments`` into a new
-        directory each. Each directory is swapped by rmtree + rename on
-        its own, so the base and its GSIs are not replaced together."""
-        import shutil
-
-        n_seg = int(self.meta.get("n_segments", 8))
-        for spec in [self.meta] + self.meta.get("gsis", []):  # the meta has no "name": data/
-            out = keyed_store.data_dir(self.store_dir, self.table, spec.get("name"))
-            tmp = out + ".tmp-" + uuid.uuid4().hex[:8]
-            keyed_store.write_segments(
-                tmp, merged, spec["hash_key"], keyed_store.key_columns(spec), n_seg
-            )
-            if os.path.isdir(out):
-                shutil.rmtree(out)
-            os.rename(tmp, out)
+        keyed_store.publish(self.store_dir, self.table, meta, merged)
 
 
 # ---------------------------------------------------------------------------
@@ -618,10 +581,7 @@ class DynamoDataSource(DataSource):
         if not table:
             raise ValueError("dynamo source requires option('tableName', ...)")
         store_dir = _opt(self.options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
-        index_name = _opt(self.options, "indexName")
-        meta = keyed_store.read_meta(store_dir, table)
-        _key_schema(meta, table, index_name)  # an unknown index raises here
-        segments = keyed_store.list_segments(store_dir, table, index_name)
+        meta, segments = keyed_store.snapshot(store_dir, table, _opt(self.options, "indexName"))
         if not segments:
             raise ValueError(f"dynamo table '{table}' has no data segments")
         # The schema the table was written with, keys non-nullable (A3);

@@ -14,15 +14,20 @@ The reference's table semantics mapped here (SURVEY §1.1):
   ``create_table`` and every commit place it the same way;
 - sort key → rows sorted by (hash_key, range_key) within segments;
 - GSI → a *materialized* copy re-partitioned by the index keys, like
-  DynamoDB's async-replicated index (``connector/TableIndexConnector``).
-  Every write commit rewrites each GSI directory right after the base
-  one; the two swaps are separate, so a reader between them sees the
-  new base with the old index;
+  DynamoDB's async-replicated index (``connector/TableIndexConnector``),
+  replaced with the base by every commit;
 - provisioned RCU/WCU → stored in _meta.json, consumed by the reader/
   writer token buckets;
 - schemalessness → ``ingest_jsonl`` loads JSON-lines documents whose
   schema only exists by sampling (the reference's inference path, A3)
   and writes them through ``create_table`` like any other table.
+
+``publish`` replaces a table's base, GSIs and ``_meta.json`` by one
+rename (``create_table`` and every commit); ``snapshot`` reads which
+files make it up. Still open (ROADMAP item 1): planned files can change
+or vanish before a reader opens them, two concurrent writers can lose
+an update, and a crash between ``publish``'s two renames leaves
+``<table>.old-*`` and no ``<table>/``.
 
 ``create_table`` collects its input with ``df.toArrow()``, bounded by
 ``spark.driver.maxResultSize`` as every write already is, and writes
@@ -92,6 +97,28 @@ def list_segments(store_dir: str, table: str, index_name: str | None = None) -> 
     )
 
 
+def key_spec(meta: dict, index_name: str | None = None) -> dict:
+    """A read's key schema: ``meta``, or its GSI ``index_name``'s entry (A5)."""
+    if not index_name:
+        return meta
+    gsis = meta.get("gsis", [])
+    for gsi in gsis:
+        if gsi["name"] == index_name:
+            return gsi
+    names = ", ".join(g["name"] for g in gsis) or "none"
+    raise ValueError(
+        f"dynamo table '{meta['table']}' has no index '{index_name}' (indexes: {names})"
+    )
+
+
+def snapshot(store_dir: str, table: str, index_name: str | None = None) -> tuple:
+    """(meta, files of the base or of GSI ``index_name``): the one reader
+    of which files make up a table. An unknown index raises ValueError."""
+    meta = read_meta(store_dir, table)
+    key_spec(meta, index_name)
+    return meta, list_segments(store_dir, table, index_name)
+
+
 def refuse_null_keys(table: str, nulls: dict[str, int]) -> None:
     """Raise ValueError for the first key column with nulls (``nulls``:
     key column → count); every later read would fail on such an item."""
@@ -153,6 +180,33 @@ def write_segments(
         )
 
 
+def publish(store_dir: str, table: str, meta: dict, rows: "pa.Table") -> None:
+    """Replace table ``table`` with ``rows``, the one code that does: the
+    base and every GSI (``write_segments``) and ``_meta.json`` are staged
+    in ``<table>.tmp-<hex>``, the live ``<table>/`` renamed aside to
+    ``<table>.old-<hex>``, the staged one renamed in and the old one
+    removed. A failure leaves the table as it was and neither behind."""
+    tag = uuid.uuid4().hex[:8]
+    tdir, staged = os.path.join(store_dir, table), f"{table}.tmp-{tag}"
+    tmp, old = os.path.join(store_dir, staged), f"{tdir}.old-{tag}"
+    try:
+        for spec in [meta] + meta.get("gsis", []):  # the meta has no "name": data/
+            write_segments(
+                data_dir(store_dir, staged, spec.get("name")), rows, spec["hash_key"],
+                key_columns(spec), int(meta.get("n_segments", 8)),
+            )
+        write_meta(store_dir, staged, meta)
+        if os.path.isdir(tdir):
+            os.rename(tdir, old)
+        os.rename(tmp, tdir)
+    finally:
+        if os.path.isdir(old) and not os.path.isdir(tdir):
+            os.rename(old, tdir)  # the second rename failed: keep the live table
+        for d in (tmp, old):
+            if os.path.isdir(d):
+                shutil.rmtree(d)
+
+
 def create_table(
     spark: SparkSession,
     df: DataFrame,
@@ -177,10 +231,9 @@ def create_table(
     the writer sorts+dedups them, like the reference's set conversion.
 
     The rows are collected with ``df.toArrow()`` and written, as they
-    are (no merge, no dedup), by ``write_segments``: the placement every
-    commit keeps. A row with no value for the hash or range key raises
-    ValueError before any file is written, and any existing table stays
-    as it was.
+    are (no merge, no dedup), by ``publish``, as every commit is. A row
+    with no value for the hash or range key raises ValueError before any
+    file is written, and any existing table stays as it was.
     """
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -196,22 +249,7 @@ def create_table(
     }
     rows = df.toArrow().cast(to_arrow_schema(df.schema))
     refuse_null_keys(table, {k: rows[k].null_count for k in key_columns(meta)})
-    tdir = os.path.join(store_dir, table)
-    staged = table + ".tmp-" + uuid.uuid4().hex[:8]
-    tmp = os.path.join(store_dir, staged)
-    try:
-        for spec in [meta] + meta["gsis"]:  # the meta has no "name": data/
-            write_segments(
-                data_dir(store_dir, staged, spec.get("name")), rows, spec["hash_key"],
-                key_columns(spec), n_segments,
-            )
-        if os.path.isdir(tdir):
-            shutil.rmtree(tdir)
-        os.rename(tmp, tdir)
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-    write_meta(store_dir, table, meta)
+    publish(store_dir, table, meta, rows)
     return meta
 
 

@@ -10,6 +10,7 @@ import glob
 import hashlib
 import math
 import os
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.dataset as pds
@@ -137,6 +138,32 @@ def test_transact_cancel_leaves_files_untouched(store):
     assert _digest(store) == before
     _commit(store, PATCH, [(9, "fresh")], transactPutIfAbsent=True)
     assert _items(store)[(9,)]["tag"] == "fresh"
+
+
+def test_a_failed_gsi_write_leaves_the_base_its_gsi_and_the_meta_as_they_were(
+    store, monkeypatch
+):
+    """The base, its GSIs and the meta are replaced together or not at
+    all: a commit whose GSI write fails changes no file and leaves no
+    staged or set-aside directory behind."""
+    write = keyed_store.write_segments
+
+    def fail_on_the_gsi(out, rows, part_key, *args):
+        if part_key == "tag":
+            raise OSError("no space left for the GSI")
+        write(out, rows, part_key, *args)
+
+    monkeypatch.setattr(keyed_store, "write_segments", fail_on_the_gsi)
+    meta = Path(keyed_store.meta_path(store, "t")).read_bytes()
+    before = _digest(store)
+    with pytest.raises(OSError, match="no space left for the GSI"):
+        _commit(store, PATCH, [(2, "put")])
+    assert _digest(store) == before
+    assert Path(keyed_store.meta_path(store, "t")).read_bytes() == meta
+    assert not [
+        p for p in glob.glob(os.path.join(store, "**", "*"), recursive=True)
+        if ".tmp-" in p or ".old-" in p
+    ]
 
 
 def test_update_sets_non_null_attributes_only(store):

@@ -12,6 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.datasource import EqualTo, GreaterThan, In, LessThanOrEqual, Not
+from pyspark.sql.types import LongType, StructField, StructType
 
 from spark_dynamodb_spark.sources import keyed_store
 from spark_dynamodb_spark.sources.dynamo import DynamoDataSource
@@ -114,9 +115,18 @@ def test_one_partition_gets_whole_capacity_budget(store):
     assert [p.value["rate"] for p in spread] == [12.5] * 8
 
 
-def test_unknown_index_names_table_index_and_indexes(store):
+@pytest.mark.parametrize(
+    "explicit_schema", [False, True], ids=["via_ds_schema", "explicit_schema"]
+)
+def test_unknown_index_names_table_index_and_indexes(store, explicit_schema):
+    """``read.schema(...).load()`` skips ``DynamoDataSource.schema``, so
+    planning checks the index as well."""
     with pytest.raises(ValueError, match=r"'t' has no index 'nope' \(indexes: by_kind\)"):
-        _plan(store, [], indexName="nope")
+        if explicit_schema:
+            ds = DynamoDataSource({"tablename": "t", "storedir": store, "indexname": "nope"})
+            ds.reader(StructType([StructField("pk", LongType())])).partitions()
+        else:
+            _plan(store, [], indexName="nope")
 
 
 NAN = float("nan")

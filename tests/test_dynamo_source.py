@@ -723,6 +723,52 @@ def test_get_spark_runs_from_outside_the_repo_under_a_deep_tmpdir(tmp_path):
     assert not [s for s in socks if os.path.exists(s)]
 
 
+_EXIT_PROBE = """
+import os
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from spark_dynamodb_spark.session import get_spark
+
+spark = get_spark("exit_probe", cpus=1)
+assert spark.sparkContext.parallelize([1, 2], 1).map(lambda v: v + 1).sum() == 5
+accumulator = spark.sparkContext._accumulatorServer.server_address
+print("accumulator", accumulator, os.path.exists(accumulator))
+raise SystemExit(0)  # before spark.stop()
+"""
+
+
+def test_get_spark_driver_that_exits_without_stop_leaves_no_socket(tmp_path):
+    """A get_spark driver that runs a Python job and exits without
+    ``spark.stop()`` leaves no socket file in its socket dir: the
+    accumulator server's is removed only by a stop, which get_spark
+    registers to run at exit."""
+    import subprocess
+    import sys
+
+    from spark_dynamodb_spark.session import socket_dir
+
+    def socks() -> set:
+        return {f for f in os.listdir(socket_dir()) if f.endswith(".sock")}
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    before = socks()
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_PROBE, repo], cwd=tmp_path,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    ((_, path, existed),) = [
+        line.split() for line in out.stdout.splitlines() if line.startswith("accumulator ")
+    ]
+    assert path.startswith(socket_dir() + "/") and existed == "True"
+    deadline = time.monotonic() + 10
+    while socks() - before and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not socks() - before
+
+
 def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):
     """s18: the dynamo streaming source must consume the table
     INCREMENTALLY (8 segments → several data micro-batches; the

@@ -45,9 +45,9 @@ store — a network KV sink has no such step.
 Read options (reference names preserved, SURVEY §2 Part A):
   tableName (required), storeDir, indexName, readPartitions,
   targetCapacity (1.0), stronglyConsistentReads (no-op shim),
-  bytesPerRCU (4000), filterPushdown (true), throughput (100 —
-  on-demand default), columns (projection: comma-separated),
-  region/roleArn (no-op shims).
+  bytesPerRCU (4000), filterPushdown (true), throughput (0 =
+  unthrottled; the budget of an on-demand table), columns (projection:
+  comma-separated), region/roleArn (no-op shims).
   Without readPartitions, a read whose pushed filters name the hash key
   (EqualTo or In: GetItem, Query, BatchGetItem) is one segment, like the
   reference's one keyed request; a scan is sized from the table bytes.
@@ -68,7 +68,7 @@ from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
-    SimpleDataSourceStreamReader,
+    DataSourceStreamReader,
     EqualTo,
     Filter,
     GreaterThan,
@@ -229,7 +229,7 @@ class DynamoReader(DataSourceReader):
             n = max(n, min(len(files), 8))
         n = min(n, len(files))
         provisioned = float(meta.get("rcu") or 0.0)
-        if provisioned <= 0:  # on-demand → 'throughput' option, default 100
+        if provisioned <= 0:  # on-demand → 'throughput' option, 0 = unthrottled
             provisioned = float(_opt(self.options, "throughput", 0) or 0)
         target_cap = float(_opt(self.options, "targetCapacity", 1.0))
         rate = partition_rate(target_cap, provisioned, n) if provisioned > 0 else 0.0
@@ -608,9 +608,9 @@ class DynamoDataSource(DataSource):
         _reread_zips_on_change()
         return DynamoWriter(schema, self.options, overwrite)
 
-    def simpleStreamReader(self, schema: StructType) -> "DynamoSimpleStreamReader":
+    def streamReader(self, schema: StructType) -> "DynamoStreamReader":
         _reread_zips_on_change()
-        return DynamoSimpleStreamReader(schema, self.options)
+        return DynamoStreamReader(schema, self.options)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> "DynamoStreamWriter":
         _reread_zips_on_change()
@@ -700,7 +700,7 @@ def register(spark, force: bool = False) -> None:
     - executor workers (batch read/write tasks): addPyFile zip
       (_ship_package) puts the package on their sys.path;
     - the STREAMING source/sink runners (driver-side helper processes
-      for simpleStreamReader/streamWriter planning): these do NOT see
+      for streamReader/streamWriter planning): these do NOT see
       pyFiles, so the class graph must be self-contained —
       register_pickle_by_value makes cloudpickle serialize our
       modules by value instead of by import reference (found by the
@@ -730,58 +730,37 @@ def register(spark, force: bool = False) -> None:
 #
 # The reference explicitly does NOT support DynamoDB Streams (SURVEY
 # §1.1); this is the Spark-first extension: the keyed store's segment
-# files stand in for stream shards, and each micro-batch consumes one
-# segment (≙ one GetRecords page per shard iterator). Offsets are
-# {"files_done": n} over the SORTED segment list — deterministic,
-# replayable, and exactly-once under Spark's offset log, which is
-# precisely the contract a real Streams adapter would expose.
+# files stand in for stream shards, and each file is one task of a
+# micro-batch (≙ one GetRecords page per shard iterator) that reads
+# Arrow with DynamoReader.read. Offsets are {"files_done": n} over the
+# SORTED file list — deterministic, replayable, and exactly-once under
+# Spark's offset log while no commit changes that list (ROADMAP item 6).
+# A micro-batch runs to the latest offset, so a static table arrives in
+# one batch: pyspark's Python stream API has no admission control.
 
 
-class DynamoSimpleStreamReader(SimpleDataSourceStreamReader):
-    def __init__(self, schema: StructType, options) -> None:
-        self.schema_ = schema
-        self.table = _opt(options, "tableName")
-        if not self.table:
-            raise ValueError("dynamo stream requires option('tableName', ...)")
-        self.store_dir = _opt(options, "storeDir", keyed_store.DEFAULT_STORE_DIR)
-
+class DynamoStreamReader(DynamoReader, DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files_done": 0}
 
-    def _segments(self) -> list[str]:
-        return keyed_store.list_segments(self.store_dir, self.table)
+    def latestOffset(self) -> dict:
+        _, files = keyed_store.snapshot(self.store_dir, self.table, self.index_name)
+        return {"files_done": len(files)}
 
-    def _rows_of(self, path: str) -> list:
-        # a LIST, not a generator: Spark pickles the read() result to
-        # ship it from the driver-side prefetcher to executors
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path, columns=[f.name for f in self.schema_.fields])
-        return list(zip(*(c.to_pylist() for c in tbl.columns)))
-
-    def read(self, start: dict):
-        done = int(start.get("files_done", 0))
-        segs = self._segments()
-        if done >= len(segs):
-            return iter([]), start  # caught up — empty batch, same offset
-        # one segment per micro-batch (≙ one shard page). iter(list),
-        # not a generator: the prefetcher both next()s and pickles it,
-        # and list iterators are the one shape that survives both.
-        return iter(self._rows_of(segs[done])), {"files_done": done + 1}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # replay path (recovery): re-read the exact segment span
-        segs = self._segments()
-        lo, hi = int(start.get("files_done", 0)), int(end.get("files_done", 0))
-        return iter([row for p in segs[lo:hi] for row in self._rows_of(p)])
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        _, files = keyed_store.snapshot(self.store_dir, self.table, self.index_name)
+        lo, hi = start["files_done"], end["files_done"]
+        return [
+            scan_segment(i, len(files), [f], 0.0) for i, f in enumerate(files[lo:hi], lo)
+        ]
 
     def commit(self, end: dict) -> None:
-        pass  # nothing to clean up — segments are immutable
+        pass  # the source holds nothing to release
 
 
-class DynamoStreamWriter(DataSourceStreamArrowWriter):
+class DynamoStreamWriter(DynamoWriter, DataSourceStreamArrowWriter):
     """Streaming SINK (``writeStream.format("dynamo")``) — every
-    micro-batch runs the same commit as the batch writer: its tasks hand
+    micro-batch runs the batch writer's write and commit: its tasks hand
     their Arrow batches to the driver-side merge, bounded by
     ``spark.driver.maxResultSize`` (put replaces whole items,
     ``update``/``delete`` options select the other merge modes).
@@ -792,16 +771,8 @@ class DynamoStreamWriter(DataSourceStreamArrowWriter):
     first-class sink.
     """
 
-    def __init__(self, schema: StructType, options, overwrite: bool) -> None:
-        self.schema_ = schema
-        self.options = options
-        self.overwrite = overwrite
-
-    def _delegate(self) -> DynamoWriter:
-        return DynamoWriter(self.schema_, self.options, self.overwrite)
-
-    def write(self, iterator) -> ArrowBatches:
-        return self._delegate().write(iterator)
-
     def commit(self, messages, batchId: int) -> None:
-        self._delegate().commit(list(messages))
+        super().commit(list(messages))
+
+    def abort(self, messages, batchId: int) -> None:
+        pass  # a failed batch never reached commit(): the store is unchanged

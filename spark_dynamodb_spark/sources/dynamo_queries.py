@@ -389,10 +389,10 @@ def dynamo_conditional_put(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dynamo_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s18: STREAMING read from the dynamo source — the DynamoDB
     Streams analog the reference never shipped (SURVEY §1.1 "no
-    streams"). DynamoSimpleStreamReader exposes the keyed store's
-    segment files as a change feed: one segment per micro-batch,
-    offsets {{files_done: n}} in Spark's offset log (exactly-once on
-    recovery via readBetweenOffsets replay). Downstream is an
+    streams"). DynamoStreamReader exposes the keyed store's segment
+    files as a change feed: one task per segment file, read as Arrow by
+    the batch reader, offsets {{files_done: n}} in Spark's offset log (a
+    recovered batch re-plans the same span). Downstream is an
     ordinary stateful aggregate — per-type counts and exact-decimal
     value sums accumulated across ALL micro-batches must equal the
     batch rollup of the same table (the oracle). (count DISTINCT is
@@ -402,7 +402,8 @@ def dynamo_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: in production the offsets are real shard iterators
     and segments arrive forever; here the feed exhausts after 8
-    segments and processAllAvailable() drains it.
+    segments, all in the first micro-batch, and processAllAvailable()
+    drains it.
     """
     from spark_dynamodb_spark.sources.dynamo import register
 
@@ -430,7 +431,7 @@ def dynamo_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
-        q.processAllAvailable()  # drains all 8 segments
+        q.processAllAvailable()
     finally:
         q.stop()
     return spark.table(name).orderBy("event_type")
@@ -703,8 +704,8 @@ def dynamo_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolated demo. The static side is re-read per batch (dim updates
     surface mid-stream) and broadcast by AQE; the streamed side never
     re-shuffles for the join; the stateful rollup accumulates across
-    all 8 segment micro-batches and must equal the batch LEFT JOIN
-    (the oracle).
+    micro-batches (the 8 segment files arrive as 8 tasks of the first)
+    and must equal the batch LEFT JOIN (the oracle).
 
     Scale shape: change-feed partitions map to shards; the join is
     stream-side-narrow + broadcast dim; state is group-sized
@@ -763,21 +764,22 @@ def dynamo_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dynamo_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s22: end-to-end CDC replication — the s18 streaming SOURCE piped
     straight into the s19 streaming SINK: the change feed of one keyed
-    table is replayed micro-batch by micro-batch into a second keyed
-    table (append mode, one segment ≙ one GetRecords page per batch),
-    and the REPLICA is then read back and aggregated. Green means the
-    copy is lossless: per-type counts and exact-decimal value sums
-    over the replica equal the batch rollup of the SOURCE table (the
-    oracle never looks at the replica). The cross-region-replication /
-    table-migration pattern DynamoDB users build with Streams+Lambda.
+    table is replayed into a second keyed table (append mode, one
+    segment file ≙ one GetRecords page per task) under
+    ``trigger(availableNow=True)``, and the REPLICA is then read back
+    and aggregated. Green means the copy is lossless: per-type counts
+    and exact-decimal value sums over the replica equal the batch rollup
+    of the SOURCE table (the oracle never looks at the replica). The
+    cross-region-replication / table-migration pattern DynamoDB users
+    build with Streams+Lambda.
 
     The replica is keyed by event_id (globally unique) so the put-
     merge is collision-free; retried batches re-put the same items —
     effectively-once, same as s19.
 
-    Scale shape: each micro-batch moves one shard-page of rows; the
-    sink's tasks hand that batch's Arrow rows to the driver, which
-    merges only that batch's keys (bounded by
+    Scale shape: each micro-batch moves the segment files that arrived
+    since the last one; the sink's tasks hand that batch's Arrow rows
+    to the driver, which merges only that batch's keys (bounded by
     ``spark.driver.maxResultSize``); nothing accumulates driver-side
     across batches and no state store is needed at all (stateless
     passthrough query).
@@ -813,14 +815,10 @@ def dynamo_cdc_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("storeDir", keyed_store.DEFAULT_STORE_DIR)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
+        .trigger(availableNow=True)
         .start()
     )
-    try:
-        # drain all 8 source segments (availableNow stops after the
-        # simple reader's FIRST prefetched span — s18 discipline)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    q.awaitTermination()
     return (
         read_dynamo(spark, replica)
         .groupBy("event_type")

@@ -1,7 +1,8 @@
 """Spark-free tests of read planning: each test builds a keyed store by
 hand under ``tmp_path`` (8 base segment files and one 8-file GSI) and
 drives ``DynamoDataSource.schema`` → ``pushFilters`` → ``partitions`` →
-``read`` in process, the same calls Spark makes."""
+``read`` in process, the same calls Spark makes; the stream reader is
+driven through its offsets the same way."""
 
 from __future__ import annotations
 
@@ -58,13 +59,17 @@ def _plan(store, filters, **options):
     reader = ds.reader(ds.schema())
     list(reader.pushFilters(filters))
     parts = reader.partitions()
-    rows = Counter(
+    return parts, _rows(reader, parts)
+
+
+def _rows(reader, parts) -> Counter:
+    """Every row that ``reader`` reads from ``parts``."""
+    return Counter(
         tuple(sorted(r.items()))
         for p in parts
         for batch in reader.read(p)
         for r in batch.to_pylist()
     )
-    return parts, rows
 
 
 KEYED = {
@@ -149,3 +154,23 @@ def test_filter_arrow_would_answer_differently_stays_residual(store, name):
     pushed = GreaterThan(("score",), 2.0)
     assert list(reader.pushFilters([RESIDUAL[name], pushed])) == [RESIDUAL[name]]
     assert reader.pushed == [pushed]
+
+
+def test_stream_span_reads_what_the_batch_reader_reads(store):
+    """The stream from its initial to its latest offset reads the batch
+    reader's rows; a span between two inner offsets reads exactly the
+    files in it, one file per partition."""
+    ds = DynamoDataSource({"tablename": "t", "storedir": store})
+    reader = ds.streamReader(ds.schema())
+    start, end = reader.initialOffset(), reader.latestOffset()
+    assert end == {"files_done": FILES}
+    _, batch_rows = _plan(store, [])
+    assert _rows(reader, reader.partitions(start, end)) == batch_rows
+
+    _, files = keyed_store.snapshot(store, "t")
+    inner = reader.partitions({"files_done": 2}, {"files_done": 5})
+    assert [p.value["files"] for p in inner] == [[f] for f in files[2:5]]
+    assert _rows(reader, inner) == Counter(
+        tuple(sorted(r.items())) for f in files[2:5] for r in pq.read_table(f).to_pylist()
+    )
+    assert reader.partitions(end, end) == []

@@ -769,11 +769,11 @@ def test_get_spark_driver_that_exits_without_stop_leaves_no_socket(tmp_path):
     assert not socks() - before
 
 
-def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):
-    """s18: the dynamo streaming source must consume the table
-    INCREMENTALLY (8 segments → several data micro-batches; the
-    prefetcher may coalesce some), and the streamed rollup equals the
-    batch read of the same table."""
+def test_stream_reader_delivers_every_item_under_both_triggers(spark, sf_dir):
+    """s18's source: a stream over the 8-segment events table delivers
+    every item of the batch read, whether it is drained with
+    processAllAvailable() or runs to its end under
+    trigger(availableNow=True)."""
     import uuid
 
     from pyspark.sql import functions as F
@@ -784,34 +784,34 @@ def test_stream_reader_consumes_one_segment_per_batch(spark, sf_dir):
 
     table = _ensure_events_kv(spark, sf_dir)
     register(spark)
-    stream = (
-        spark.readStream.format("dynamo")
-        .option("tableName", table)
-        .option("storeDir", keyed_store.DEFAULT_STORE_DIR)
-        .load()
-    )
-    agg = stream.groupBy().agg(F.count("*").alias("n"))
-    name = "s18t_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        progress = q.recentProgress
-    finally:
-        q.stop()
-    data_batches = [p for p in progress if p["numInputRows"] > 0]
-    # the driver-side prefetcher may coalesce adjacent read() results
-    # into one planned batch, so "8 segments" ⇒ *several* batches, not
-    # necessarily exactly 8 — multi-batch incremental consumption is
-    # the property under test
-    assert len(data_batches) >= 4, [p["numInputRows"] for p in progress]
-    streamed_n = spark.table(name).collect()[0]["n"]
+
+    def streamed_count(run) -> int:
+        stream = (
+            spark.readStream.format("dynamo")
+            .option("tableName", table)
+            .option("storeDir", keyed_store.DEFAULT_STORE_DIR)
+            .load()
+        )
+        name = "s18t_" + uuid.uuid4().hex[:8]
+        run(
+            stream.groupBy().agg(F.count("*").alias("n"))
+            .writeStream.format("memory").queryName(name).outputMode("complete")
+        )
+        return spark.table(name).collect()[0]["n"]
+
+    def drain(writer) -> None:
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def available_now(writer) -> None:
+        writer.trigger(availableNow=True).start().awaitTermination()
+
     batch_n = read_dynamo(spark, table).count()
-    assert streamed_n == batch_n
+    assert streamed_count(drain) == batch_n
+    assert streamed_count(available_now) == batch_n
 
 
 def test_transact_cancel_leaves_store_untouched(spark, sf_dir):
